@@ -28,6 +28,13 @@ import os
 import sys
 
 
+def _trigger_seconds(text: str) -> float:
+    seconds = float(text)
+    if not seconds >= 0.001:
+        raise argparse.ArgumentTypeError(f"{text!r}: the trigger interval is at least 0.001 s")
+    return seconds
+
+
 def _build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="detector_network_processor_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -39,7 +46,7 @@ def _build_parser() -> argparse.ArgumentParser:
     runp.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     runp.add_argument("--limit", type=int, default=20)
     runp.add_argument("--explain", action="store_true", help="print the physical plan instead of rows")
-    runp.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or 32)")
+    runp.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())")
 
     op = sub.add_parser("oracle", help="print a query's DuckDB oracle SQL")
     op.add_argument("name")
@@ -55,9 +62,15 @@ def _build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--checkpoint", required=True)
     sp.add_argument("--criterion", choices=("physics", "simple"), default="physics")
     sp.add_argument("--watermark-ns", type=int, default=10_000_000_000)
-    sp.add_argument("--trigger-seconds", type=int, default=None)
+    sp.add_argument(
+        "--trigger-seconds",
+        type=_trigger_seconds,
+        default=None,
+        help="processing-time trigger interval, fractional allowed (0.1 = the reference's "
+        "100 ms flush tick); default: next batch as soon as the last one ends",
+    )
     sp.add_argument("--available-now", action="store_true", help="drain the spool and exit")
-    sp.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or 32)")
+    sp.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())")
 
     mon = sub.add_parser(
         "monitor", help="run the streaming monitoring path (detector summaries -> K1/K2 lines)"
@@ -107,7 +120,7 @@ def _build_parser() -> argparse.ArgumentParser:
         default="events_bucketed",
         help="catalog table name for --bucket-by-station",
     )
-    mat.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or 32)")
+    mat.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())")
 
     cp = sub.add_parser(
         "compact",
@@ -126,14 +139,14 @@ def _build_parser() -> argparse.ArgumentParser:
         "recall-leaning: bucket agreement is the only membership evidence, "
         "so --jaccard is ignored in this mode",
     )
-    cp.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or 32)")
+    cp.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())")
 
     ver = sub.add_parser(
         "verify", help="hash-compare registered queries against their DuckDB oracles"
     )
     ver.add_argument("names", nargs="*", help="query names (default: all with oracles)")
     ver.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ver.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or 32)")
+    ver.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())")
     return p
 
 
@@ -204,14 +217,30 @@ def _cmd_stream(args) -> int:
         .outputMode("append")
     )
     if args.available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        if args.trigger_seconds:
-            writer = writer.trigger(processingTime=f"{args.trigger_seconds} seconds")
-        q = writer.start()
-        q.awaitTermination()
+        writer = writer.trigger(availableNow=True)
+    elif args.trigger_seconds:
+        writer = writer.trigger(processingTime=f"{round(args.trigger_seconds * 1000)} milliseconds")
+    _start_on_one_state_partition(spark, writer).awaitTermination()
     return 0
+
+
+def _start_on_one_state_partition(spark, writer):
+    """Start ``writer`` with ``spark.sql.shuffle.partitions=1`` and restore
+    the session's value right after: the main path's session key is a
+    constant (streaming/coincidence.py), so only one state partition ever
+    holds a row, while each of the others still loads and commits its own
+    state store every trigger. The query clones the session conf when it
+    starts, and the count is recorded in its offset log, so a restart from
+    an existing checkpoint keeps the count that checkpoint was created
+    with. The conf is the session's, so a query another thread starts
+    during this call would also get one partition."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, prev)
 
 
 def _cmd_ingest(args) -> int:

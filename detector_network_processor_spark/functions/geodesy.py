@@ -6,7 +6,7 @@ WGS84>::straight_distance``, called from reference
 src/analysis/coincidence.cpp:20-24). Standard public WGS84 math.
 
 Two implementations with identical arithmetic:
-- numpy (vectorized; used by the golden model and the per-cluster kernel)
+- scalar ``math`` (used by the golden model and the per-cluster kernel)
 - Spark Column expressions (JVM-side; used for SQL-path distance predicates)
 """
 
@@ -14,36 +14,15 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
 from ..constants import WGS84_A, WGS84_E2
 
 
-def ecef_np(lat_deg, lon_deg, h):
-    """Geodetic (degrees, meters) -> ECEF (x, y, z) in meters, numpy."""
-    lat = np.radians(np.asarray(lat_deg, dtype=np.float64))
-    lon = np.radians(np.asarray(lon_deg, dtype=np.float64))
-    h = np.asarray(h, dtype=np.float64)
-    sin_lat = np.sin(lat)
-    n = WGS84_A / np.sqrt(1.0 - WGS84_E2 * sin_lat * sin_lat)
-    x = (n + h) * np.cos(lat) * np.cos(lon)
-    y = (n + h) * np.cos(lat) * np.sin(lon)
-    z = (n * (1.0 - WGS84_E2) + h) * sin_lat
-    return x, y, z
-
-
-def straight_distance_np(lat1, lon1, h1, lat2, lon2, h2):
-    """Chord (straight-line) distance in meters between two geodetic points."""
-    x1, y1, z1 = ecef_np(lat1, lon1, h1)
-    x2, y2, z2 = ecef_np(lat2, lon2, h2)
-    return np.sqrt((x1 - x2) ** 2 + (y1 - y2) ** 2 + (z1 - z2) ** 2)
-
-
 def ecef_scalar(lat_deg: float, lon_deg: float, h: float) -> tuple[float, float, float]:
     """Scalar geodetic -> ECEF (pure math module — IEEE double, same
-    arithmetic as the numpy path; hot in the clustering kernel)."""
+    arithmetic as the column path; hot in the clustering kernel)."""
     lat = math.radians(lat_deg)
     lon = math.radians(lon_deg)
     sin_lat = math.sin(lat)
@@ -105,35 +84,3 @@ def geohash_col(lat: Column, lon: Column, precision: int = 6) -> Column:
         idx = sum(bit(c * 5 + j) * (1 << (4 - j)) for j in range(5))
         chars.append(F.substr(F.lit(base32), (idx + 1).cast("int"), F.lit(1)))
     return F.concat(*chars)
-
-
-def geohash_encode(lat: float, lon: float, precision: int = 6) -> str:
-    """Standard public geohash encoding (reference uses libmuonpi's encoder
-    for the anonymization projection, include/sink/mqtt.h:156-158)."""
-    base32 = "0123456789bcdefghjkmnpqrstuvwxyz"
-    lat_lo, lat_hi = -90.0, 90.0
-    lon_lo, lon_hi = -180.0, 180.0
-    bits = []
-    even = True
-    while len(bits) < precision * 5:
-        if even:
-            mid = (lon_lo + lon_hi) / 2
-            if lon >= mid:
-                bits.append(1)
-                lon_lo = mid
-            else:
-                bits.append(0)
-                lon_hi = mid
-        else:
-            mid = (lat_lo + lat_hi) / 2
-            if lat >= mid:
-                bits.append(1)
-                lat_lo = mid
-            else:
-                bits.append(0)
-                lat_hi = mid
-        even = not even
-    out = []
-    for i in range(0, len(bits), 5):
-        out.append(base32[int("".join(map(str, bits[i : i + 5])), 2)])
-    return "".join(out)

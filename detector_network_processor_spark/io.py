@@ -82,15 +82,6 @@ def table_row_count(sf_dir: str, name: str) -> int:
     return _ROWCOUNT_CACHE[key]
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 # --------------------------------------------------------------------------
 # Scale-out storage layout (100 TB posture)
 # --------------------------------------------------------------------------

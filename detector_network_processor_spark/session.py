@@ -104,7 +104,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     warehouse_dir: str | None = None,
 ) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """``local[cpus]`` session; ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``,
+    else the host's CPU count, and the shuffle partition count to
+    ``$SPARK_SHUFFLE_PARTITIONS``, else ``cpus``."""
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
     shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(cpus)))
     builder = SparkSession.builder.master(f"local[{cpus}]")
     if warehouse_dir is not None:
@@ -125,6 +128,12 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # single-host local mode has no data locality to wait for
         .config("spark.locality.wait", "0s")
+        # list files on the driver, always: on local[N] a "parallel"
+        # listing is one extra job with one task per path, which a file
+        # stream paid in every micro-batch with more than 32 new files
+        # (~250 ms of getBatch per trigger on 4 cores) and a band-index
+        # read paid once it held more than 32 batch directories
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

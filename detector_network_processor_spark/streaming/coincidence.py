@@ -99,6 +99,12 @@ def stream_cluster_coincidences(
     ``SESSION_PATH_MAX_ROWS_PER_TRIGGER`` — the constant session key
     funnels all state updates through one state partition.
 
+    Only that one partition ever holds a row, yet a query started with
+    ``spark.sql.shuffle.partitions=N`` loads and commits N state stores
+    per trigger. The ``stream`` command therefore starts its query with
+    the count set to 1 (``__main__._start_on_one_state_partition``);
+    other callers should do the same for a new checkpoint.
+
     NOTE: building the plan sets the session-global conf
     ``spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition``
     (map-side session pre-merge). The setting persists on the
@@ -122,9 +128,10 @@ def stream_cluster_coincidences(
         )
     warnings.warn(
         "stream_cluster_coincidences serializes session state onto one "
-        "state partition (constant grouping key) — fine at station-network "
-        "rates; for high-volume streams use "
-        "stream_cluster_coincidences_scaled.",
+        "state partition (constant grouping key; the stream command starts "
+        "it with spark.sql.shuffle.partitions=1 so no other state store is "
+        "committed per trigger) — fine at station-network rates; for "
+        "high-volume streams use stream_cluster_coincidences_scaled.",
         UserWarning,
         stacklevel=2,
     )

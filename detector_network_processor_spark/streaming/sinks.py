@@ -1,5 +1,6 @@
-"""Sinks (SURVEY.md §2.9). The engine's canonical sink is parquet via
-``foreachBatch`` (K4/K5 analog); the MQTT/InfluxDB network links are
+"""Sinks (SURVEY.md §2.9). The engine's canonical sink is the ``stream``
+command's append-mode parquet file sink with a checkpoint (K4/K5 analog,
+``__main__._cmd_stream``); the MQTT/InfluxDB network links are
 peripheral per the north star (BASELINE.json) and are modeled as line/point
 FORMATTERS (pure column expressions, oracle-testable) that any transport
 callback can drain.
@@ -59,39 +60,6 @@ def l1_influx_points(l1_flat: DataFrame, measurement: str = "L1Event") -> DataFr
             F.col("start"),
         ).alias("point")
     )
-
-
-def write_stream_parquet(df: DataFrame, path: str, checkpoint: str, trigger_seconds: int | None = None):
-    """K4/K5: the durable sink — append-mode parquet with checkpointing."""
-    writer = df.writeStream.format("parquet").option("path", path).option(
-        "checkpointLocation", checkpoint
-    ).outputMode("append")
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
-def foreach_batch_collector(callback, chunk_size: int = 10_000):
-    """Adapter for network links (MQTT publish, Influx write): calls
-    ``callback(list_of_rows, batch_id)`` per micro-batch with the formatted
-    lines — the transport client stays outside the engine.
-
-    Rows are drained through ``toLocalIterator`` in ``chunk_size`` slices
-    (one partition in driver memory at a time) so an unbounded L1 stream
-    never materializes a full micro-batch driver-side; callbacks may be
-    invoked more than once per batch with the same ``batch_id``."""
-
-    def handle(batch_df: DataFrame, batch_id: int):
-        chunk, called = [], False
-        for row in batch_df.toLocalIterator(prefetchPartitions=True):
-            chunk.append(row)
-            if len(chunk) >= chunk_size:
-                callback(chunk, batch_id)
-                chunk, called = [], True
-        if chunk or not called:  # always signal the batch, even when empty
-            callback(chunk, batch_id)
-
-    return handle
 
 
 def save_histograms(hist: DataFrame, path: str, mode: str = "overwrite") -> None:

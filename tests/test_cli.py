@@ -3,12 +3,14 @@ oracle in-process, and the stream daemon mode end-to-end over a spool dir."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import subprocess
 import sys
 import tempfile
 
 from detector_network_processor_spark.__main__ import main
+from detector_network_processor_spark.session import get_spark
 
 
 def test_list_names_every_registered_query(capsys):
@@ -44,55 +46,173 @@ def test_run_explain(spark, capsys):
     assert "AdaptiveSparkPlan" in capsys.readouterr().out
 
 
-def test_stream_daemon_drains_spool(spark):
-    """stream --available-now over a tiny spool produces flattened L1 rows."""
+EPOCH_NS = 1_700_000_000 * 10**9  # the parser requires >=17-char timestamps
+LINES_SCHEMA = "topic string, payload string"
+# every column of the flattened L1 row but session_id, which the batch
+# operator numbers and the streaming resolver leaves null
+L1_ROW_COLS = (
+    "uuid", "group_start", "group_end", "n", "conflicting", "true_e",
+    "pos", "hash", "start", "end", "time_acc",
+)
+STREAM_ARGS = ["stream", "--lines-dir", "{tmp}/spool/b*", "--stations-parquet", "{tmp}/stations",
+               "--out", "{tmp}/l1", "--checkpoint", "{tmp}/ckpt"]
+
+
+def _line(e):
+    s, en = (e["start"] + EPOCH_NS) / 1e9, (e["end"] + EPOCH_NS) / 1e9
+    return (
+        f"muonpi/data/user{e['hash']}/det",
+        f"{s:.9f} {en:.9f} {e['time_acc']} {e['ublox_counter']} {e['fix']} 0 1",
+    )
+
+
+def _spool_fixture(spark, tmp):
+    """Time-ordered MQTT lines of a small station network, a far-future
+    close-out sentinel that lets the watermark pass every real session,
+    and the station dimension written to ``tmp/stations``."""
     import pyspark.sql.functions as F
 
     from muon_fixtures import STATIONS, make_events
 
-    events = make_events(n_base=200, seed=7)
-    EPOCH_NS = 1_700_000_000 * 10**9
-
-    def line(e):
-        s, en = (e["start"] + EPOCH_NS) / 1e9, (e["end"] + EPOCH_NS) / 1e9
-        return (
-            f"muonpi/data/user{e['hash']}/det",
-            f"{s:.9f} {en:.9f} {e['time_acc']} {e['ublox_counter']} {e['fix']} 0 1",
-        )
-
-    lines = [line(e) for e in events]
-    # close-out sentinel so the watermark passes every real session
-    sent_s = (max(e["start"] for e in events) + EPOCH_NS + 10**12) / 1e9
+    events = sorted(make_events(n_base=200, seed=7), key=lambda e: e["start"])
+    lines = [_line(e) for e in events]
+    sent_s = (events[-1]["start"] + EPOCH_NS + 10**12) / 1e9
     sentinel = ("muonpi/data/user1001/det", f"{sent_s:.9f} {sent_s + 1e-6:.9f} 1 0 1 0 1")
-
     st_rows = [
         dict(username=f"user{h}", station_id="det", lat=lat, lon=lon, h=hh)
         for (h, lat, lon, hh) in STATIONS
-    ] + [dict(username="user1001", station_id="det", lat=47.0, lon=8.0, h=450.0)]
+    ]
     stations = spark.createDataFrame(st_rows).select(
         F.xxhash64(F.concat_ws("/", "username", "station_id")).alias("hash"), "lat", "lon", "h"
     )
+    stations.write.parquet(f"{tmp}/stations")
+    return lines, sentinel, stations
 
+
+def _write_spool(spark, path, lines):
+    spark.createDataFrame(lines, LINES_SCHEMA).coalesce(1).write.parquet(path)
+
+
+def _l1_rows(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.select(*L1_ROW_COLS).collect())
+
+
+def _batch_l1_rows(spark, lines, stations):
+    """Batch parse -> quality gate -> cluster_coincidences -> l1_flatten
+    over the same lines: what the stream command must land."""
+    import pyspark.sql.functions as F
+
+    from detector_network_processor_spark.constants import MAX_TIMING_ERROR_NS
+    from detector_network_processor_spark.operators.coincidence import (
+        cluster_coincidences,
+        l1_flatten,
+    )
+    from detector_network_processor_spark.sources.lines import parse_events
+
+    gated = parse_events(spark.createDataFrame(lines, LINES_SCHEMA)).filter(
+        (F.col("time_acc") <= int(MAX_TIMING_ERROR_NS)) & (F.col("fix") == 1)
+    )
+    return _l1_rows(l1_flatten(cluster_coincidences(gated, stations=stations, criterion="physics")))
+
+
+def _last_batch(log_dir):
+    return max(int(name) for name in os.listdir(log_dir) if name.isdigit())
+
+
+def _offset_conf(ckpt, batch_id):
+    """The session conf a query recorded in its offset log for a batch."""
+    import json
+
+    with open(f"{ckpt}/offsets/{batch_id}") as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def test_stream_trigger_seconds_accepts_fractions():
+    """--trigger-seconds takes the reference's 100 ms flush tick; whole
+    seconds parse as before; an interval under 1 ms is refused."""
+    import pytest
+
+    from detector_network_processor_spark.__main__ import _build_parser
+
+    p = _build_parser()
+    argv = [a.format(tmp="t") for a in STREAM_ARGS]
+    assert p.parse_args(argv + ["--trigger-seconds", "0.1"]).trigger_seconds == 0.1
+    assert p.parse_args(argv + ["--trigger-seconds", "3"]).trigger_seconds == 3
+    assert p.parse_args(argv).trigger_seconds is None
+    for bad in ("0", "-1", "0.0001"):
+        with pytest.raises(SystemExit):
+            p.parse_args(argv + ["--trigger-seconds", bad])
+
+
+def test_stream_daemon_drains_spool(spark):
+    """stream --available-now lands exactly the batch L1 rows of the same
+    parsed and gated lines, on a query started with one state partition,
+    and leaves the session's own partition count as it found it."""
     tmp = tempfile.mkdtemp(prefix="dnp_cli_stream_")
     try:
-        schema = "topic string, payload string"
-        spark.createDataFrame(lines, schema).coalesce(1).write.parquet(f"{tmp}/spool/b0")
-        spark.createDataFrame([sentinel], schema).coalesce(1).write.parquet(f"{tmp}/spool/b1")
-        stations.write.parquet(f"{tmp}/stations")
-        rc = main(
-            [
-                "stream",
-                "--lines-dir", f"{tmp}/spool/b*",
-                "--stations-parquet", f"{tmp}/stations",
-                "--out", f"{tmp}/l1",
-                "--checkpoint", f"{tmp}/ckpt",
-                "--available-now",
-            ]
-        )
+        lines, sentinel, stations = _spool_fixture(spark, tmp)
+        _write_spool(spark, f"{tmp}/spool/b0", lines)
+        _write_spool(spark, f"{tmp}/spool/b1", [sentinel])
+        want = _batch_l1_rows(spark, lines + [sentinel], stations)
+        # the command's get_spark call re-applies the session's partition
+        # count for its --cpus; make that same call first
+        cpus = str(spark.sparkContext.defaultParallelism)
+        before = get_spark(cpus=cpus).conf.get("spark.sql.shuffle.partitions")
+        rc = main([a.format(tmp=tmp) for a in STREAM_ARGS] + ["--available-now", "--cpus", cpus])
         assert rc == 0
-        out = spark.read.parquet(f"{tmp}/l1")
-        assert out.count() > 0
-        assert {"hash", "start", "n"} <= set(out.columns)
+        assert _offset_conf(f"{tmp}/ckpt", 0)["spark.sql.shuffle.partitions"] == "1"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        got = _l1_rows(spark.read.parquet(f"{tmp}/l1"))
+        assert sum(want.values()) > 50
+        assert got == want
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_stream_resumes_checkpoint_with_its_partition_count(spark):
+    """A checkpoint written on the session's default partition count (how
+    the command started its query before it pinned one state partition)
+    resumes under the command: the two runs' output together equals the
+    single-pass batch result, and the offset log keeps the old count."""
+    from detector_network_processor_spark.operators.coincidence import l1_flatten
+    from detector_network_processor_spark.streaming.pipeline import (
+        stream_main_path,
+        use_rocksdb_state,
+    )
+
+    tmp = tempfile.mkdtemp(prefix="dnp_cli_resume_")
+    try:
+        lines, sentinel, stations = _spool_fixture(spark, tmp)
+        half = len(lines) // 2
+        _write_spool(spark, f"{tmp}/spool/b0", lines[:half])
+        old_count = spark.conf.get("spark.sql.shuffle.partitions")
+        assert old_count != "1"
+        use_rocksdb_state(spark)
+        src = spark.readStream.schema(LINES_SCHEMA).parquet(f"{tmp}/spool/b*")
+        q = (
+            l1_flatten(stream_main_path(src, spark.read.parquet(f"{tmp}/stations")), min_n=2)
+            .writeStream.format("parquet")
+            .option("path", f"{tmp}/l1")
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        first_run_last = _last_batch(f"{tmp}/ckpt/commits")
+        _write_spool(spark, f"{tmp}/spool/b1", lines[half:])
+        _write_spool(spark, f"{tmp}/spool/b2", [sentinel])
+        cpus = str(spark.sparkContext.defaultParallelism)
+        rc = main([a.format(tmp=tmp) for a in STREAM_ARGS] + ["--available-now", "--cpus", cpus])
+        assert rc == 0
+        last = _last_batch(f"{tmp}/ckpt/offsets")
+        assert last > first_run_last
+        assert _offset_conf(f"{tmp}/ckpt", last)["spark.sql.shuffle.partitions"] == old_count
+        want = _batch_l1_rows(spark, lines + [sentinel], stations)
+        assert sum(want.values()) > 50
+        assert _l1_rows(spark.read.parquet(f"{tmp}/l1")) == want
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
