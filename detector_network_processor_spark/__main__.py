@@ -28,11 +28,34 @@ import os
 import sys
 
 
+_CPUS_HELP = "local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())"
+
+
 def _trigger_seconds(text: str) -> float:
     seconds = float(text)
     if not seconds >= 0.001:
         raise argparse.ArgumentTypeError(f"{text!r}: the trigger interval is at least 0.001 s")
     return seconds
+
+
+def _add_trigger_seconds(parser: argparse.ArgumentParser) -> None:
+    parser.add_argument(
+        "--trigger-seconds",
+        type=_trigger_seconds,
+        default=None,
+        help="processing-time trigger interval, fractional allowed (0.1 = the reference's "
+        "100 ms flush tick); default: next batch as soon as the last one ends",
+    )
+
+
+def _with_trigger(writer, args):
+    """``--available-now`` or ``--trigger-seconds`` (passed to Spark in
+    milliseconds); with neither, each batch starts as soon as the last ends."""
+    if args.available_now:
+        return writer.trigger(availableNow=True)
+    if args.trigger_seconds:
+        return writer.trigger(processingTime=f"{round(args.trigger_seconds * 1000)} milliseconds")
+    return writer
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -46,7 +69,7 @@ def _build_parser() -> argparse.ArgumentParser:
     runp.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     runp.add_argument("--limit", type=int, default=20)
     runp.add_argument("--explain", action="store_true", help="print the physical plan instead of rows")
-    runp.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())")
+    runp.add_argument("--cpus", default=None, help=_CPUS_HELP)
 
     op = sub.add_parser("oracle", help="print a query's DuckDB oracle SQL")
     op.add_argument("name")
@@ -62,15 +85,9 @@ def _build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--checkpoint", required=True)
     sp.add_argument("--criterion", choices=("physics", "simple"), default="physics")
     sp.add_argument("--watermark-ns", type=int, default=10_000_000_000)
-    sp.add_argument(
-        "--trigger-seconds",
-        type=_trigger_seconds,
-        default=None,
-        help="processing-time trigger interval, fractional allowed (0.1 = the reference's "
-        "100 ms flush tick); default: next batch as soon as the last one ends",
-    )
+    _add_trigger_seconds(sp)
     sp.add_argument("--available-now", action="store_true", help="drain the spool and exit")
-    sp.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())")
+    sp.add_argument("--cpus", default=None, help=_CPUS_HELP)
 
     mon = sub.add_parser(
         "monitor", help="run the streaming monitoring path (detector summaries -> K1/K2 lines)"
@@ -86,7 +103,7 @@ def _build_parser() -> argparse.ArgumentParser:
     mon.add_argument("--output", choices=("text", "influx", "summary"), default="text")
     mon.add_argument("--interval-ns", type=int, default=120 * 10**9)
     mon.add_argument("--available-now", action="store_true", help="drain the spool and exit")
-    mon.add_argument("--cpus", default=None)
+    mon.add_argument("--cpus", default=None, help=_CPUS_HELP)
 
     ing = sub.add_parser(
         "ingest", help="stream documents against the persistent near-dup index"
@@ -96,8 +113,9 @@ def _build_parser() -> argparse.ArgumentParser:
     ing.add_argument("--out", required=True, help="near-dup pair output dir (batch_id partitions)")
     ing.add_argument("--checkpoint", required=True)
     ing.add_argument("--threshold", type=float, default=0.5)
+    _add_trigger_seconds(ing)
     ing.add_argument("--available-now", action="store_true", help="drain the spool and exit")
-    ing.add_argument("--cpus", default=None)
+    ing.add_argument("--cpus", default=None, help=_CPUS_HELP)
 
     mat = sub.add_parser(
         "materialize",
@@ -120,7 +138,7 @@ def _build_parser() -> argparse.ArgumentParser:
         default="events_bucketed",
         help="catalog table name for --bucket-by-station",
     )
-    mat.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())")
+    mat.add_argument("--cpus", default=None, help=_CPUS_HELP)
 
     cp = sub.add_parser(
         "compact",
@@ -139,14 +157,14 @@ def _build_parser() -> argparse.ArgumentParser:
         "recall-leaning: bucket agreement is the only membership evidence, "
         "so --jaccard is ignored in this mode",
     )
-    cp.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())")
+    cp.add_argument("--cpus", default=None, help=_CPUS_HELP)
 
     ver = sub.add_parser(
         "verify", help="hash-compare registered queries against their DuckDB oracles"
     )
     ver.add_argument("names", nargs="*", help="query names (default: all with oracles)")
     ver.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ver.add_argument("--cpus", default=None, help="local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())")
+    ver.add_argument("--cpus", default=None, help=_CPUS_HELP)
     return p
 
 
@@ -216,11 +234,7 @@ def _cmd_stream(args) -> int:
         .option("checkpointLocation", args.checkpoint)
         .outputMode("append")
     )
-    if args.available_now:
-        writer = writer.trigger(availableNow=True)
-    elif args.trigger_seconds:
-        writer = writer.trigger(processingTime=f"{round(args.trigger_seconds * 1000)} milliseconds")
-    _start_on_one_state_partition(spark, writer).awaitTermination()
+    _start_on_one_state_partition(spark, _with_trigger(writer, args)).awaitTermination()
     return 0
 
 
@@ -252,8 +266,7 @@ def _cmd_ingest(args) -> int:
     writer = incremental_neardup_query(
         docs, args.index, args.out, args.checkpoint, threshold=args.threshold
     )
-    q = writer.trigger(availableNow=True).start() if args.available_now else writer.start()
-    q.awaitTermination()
+    _with_trigger(writer, args).start().awaitTermination()
     return 0
 
 

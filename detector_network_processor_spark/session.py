@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def release_cached(
     spark: SparkSession, jvm_gc: bool = False, settle_sec: float = 0.0, blocking: bool = False
@@ -135,6 +137,14 @@ def get_spark(
         # read paid once it held more than 32 batch directories
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # map-side session pre-merge for streaming session windows (a
+        # streaming-only conf; batch plans do not read it)
+        .config("spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
+        # every Python task skips re-reading pyspark.zip and the other
+        # archives on its sys.path (worker_daemon.py); the package's parent
+        # directory lets the daemon start whatever the JVM's working dir
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

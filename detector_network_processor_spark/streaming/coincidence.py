@@ -105,13 +105,6 @@ def stream_cluster_coincidences(
     the count set to 1 (``__main__._start_on_one_state_partition``);
     other callers should do the same for a new checkpoint.
 
-    NOTE: building the plan sets the session-global conf
-    ``spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition``
-    (map-side session pre-merge). The setting persists on the
-    SparkSession and applies to every subsequent session_window query in
-    it — harmless for those queries (pre-merge is a pure optimization),
-    noted here because plan-builders normally don't mutate session state.
-
     Returns a streaming L1 DataFrame (append mode; sessions emit once the
     watermark passes their gap horizon)."""
     if (
@@ -157,13 +150,10 @@ def stream_cluster_coincidences(
     # extends past first_hit + gap; verified on 4.1), and
     # applyInPandasWithState/transformWithState are disallowed downstream
     # of a streaming aggregation. What IS available: map-side session
-    # pre-merge, which collapses each micro-batch's sessions locally
-    # before they reach the single state partition, cutting state-update
-    # traffic from O(hits) to O(open sessions) per trigger.
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true"
-    )
+    # pre-merge (set by ``session.get_spark``), which collapses each
+    # micro-batch's sessions locally before they reach the single state
+    # partition, cutting state-update traffic from O(hits) to O(open
+    # sessions) per trigger.
     return (
         with_ts.withColumn("_k", F.lit(0))
         .groupBy("_k", F.session_window("_ts", f"{gap_ns + 1} microseconds"))

@@ -83,13 +83,23 @@ def read_band_index(spark, index_path: str, before_batch: int, id_col: str = "do
     pre-r12 exploded form (16 signature-carrying rows per doc) — the
     schema probe is driver-side metadata, so an index written by the
     previous layout keeps working instead of failing its next increment."""
+    return _read_band_index_layout(spark, index_path, before_batch, id_col)[0]
+
+
+def _read_band_index_layout(
+    spark, index_path: str, before_batch: int, id_col: str
+) -> tuple[DataFrame, bool]:
+    """``read_band_index`` plus whether the index is in the pre-r12
+    exploded layout. The schema comes from one file's footer, so an index
+    must hold one layout only: an increment appends in the layout found
+    here (a mixed index reads one layout's rows as nulls)."""
     from ..operators.dedup import explode_band_hashes
 
     idx = spark.read.parquet(index_path).filter(F.col("ingest_batch") < before_batch)
     if "bhashes" in idx.columns:
-        return explode_band_hashes(idx, id_col=id_col)
+        return explode_band_hashes(idx, id_col=id_col), False
     if "bhash" in idx.columns:  # pre-r12 exploded layout
-        return idx.select(id_col, "signature", "band", "bhash")
+        return idx.select(id_col, "signature", "band", "bhash"), True
     raise ValueError(
         f"band index at {index_path!r} has neither a compact 'bhashes' column "
         f"nor exploded 'band'/'bhash' columns (found {idx.columns}) — not a "
@@ -173,8 +183,9 @@ def process_neardup_increment(
     """One increment: signatures for ``batch_docs`` collide against the
     historical band index AND against each other; pairs with estimated
     Jaccard >= ``threshold`` land in ``out_path/batch_id=N`` and the new
-    band rows are appended as ``index_path/ingest_batch=N``. Replays of a
-    batch_id overwrite (not duplicate) both directories.
+    band rows are appended as ``index_path/ingest_batch=N``, in the layout
+    the index already holds. Replays of a batch_id overwrite (not
+    duplicate) both directories.
 
     The collision work is ONE join per increment (``collision_pairs`` —
     plan rationale there), over a COMPACT band index: one row per doc
@@ -196,7 +207,8 @@ def process_neardup_increment(
     sigs = minhash_signatures(
         batch_docs.select(id_col, text_col), id_col=id_col, text_col=text_col, portable=portable
     ).localCheckpoint(eager=True)
-    # compact form feeds the index WRITE; the collision join's band rows
+    # compact form feeds the index WRITE (band rows when the index found
+    # below is pre-r12 exploded); the collision join's band rows
     # come from band_rows' inline explode (see its docstring for why the
     # two-step explode-an-aliased-column form is a planning trap)
     new_compact = sigs.select(
@@ -204,10 +216,10 @@ def process_neardup_increment(
     )
     new_bands = band_rows(sigs, id_col=id_col, portable=portable)
 
-    hist = (
-        read_band_index(spark, index_path, before_batch=batch_id, id_col=id_col)
+    hist, exploded = (
+        _read_band_index_layout(spark, index_path, batch_id, id_col)
         if _index_exists(spark, index_path)
-        else None
+        else (None, False)
     )
     pairs = collision_pairs(new_bands, hist, threshold, id_col=id_col)
 
@@ -231,7 +243,7 @@ def process_neardup_increment(
     def _write_index() -> None:
         # the ingest_batch column comes from the partition DIRECTORY name at
         # read time — writing it into the files too would collide on discovery
-        new_compact.write.mode("overwrite").parquet(
+        (new_bands if exploded else new_compact).write.mode("overwrite").parquet(
             os.path.join(index_path, f"ingest_batch={batch_id}")
         )
 

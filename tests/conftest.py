@@ -41,6 +41,6 @@ def _per_test_timeout(request):
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="dnp-spark-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark(app_name="dnp-spark-tests")
     yield spark
     spark.stop()

@@ -146,6 +146,35 @@ def test_stream_trigger_seconds_accepts_fractions():
             p.parse_args(argv + ["--trigger-seconds", bad])
 
 
+def test_ingest_trigger_seconds_matches_stream():
+    """ingest takes the same --trigger-seconds as stream, passed to Spark in
+    milliseconds; --available-now still wins, and no flag means no trigger."""
+    import pytest
+
+    from detector_network_processor_spark.__main__ import _build_parser, _with_trigger
+
+    class Writer:
+        kw = None
+
+        def trigger(self, **kw):
+            self.kw = kw
+            return self
+
+    p = _build_parser()
+    argv = ["ingest", "--docs-dir", "d", "--index", "i", "--out", "o", "--checkpoint", "c"]
+    tick = p.parse_args(argv + ["--trigger-seconds", "0.1"])
+    assert tick.trigger_seconds == 0.1
+    assert _with_trigger(Writer(), tick).kw == {"processingTime": "100 milliseconds"}
+    five = p.parse_args(argv + ["--trigger-seconds", "5"])
+    assert _with_trigger(Writer(), five).kw == {"processingTime": "5000 milliseconds"}
+    drain = p.parse_args(argv + ["--trigger-seconds", "5", "--available-now"])
+    assert _with_trigger(Writer(), drain).kw == {"availableNow": True}
+    assert _with_trigger(Writer(), p.parse_args(argv)).kw is None
+    for bad in ("0", "-1", "0.0001"):
+        with pytest.raises(SystemExit):
+            p.parse_args(argv + ["--trigger-seconds", bad])
+
+
 def test_stream_daemon_drains_spool(spark):
     """stream --available-now lands exactly the batch L1 rows of the same
     parsed and gated lines, on a query started with one state partition,

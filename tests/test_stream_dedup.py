@@ -280,6 +280,43 @@ def test_increment_reads_pre_r12_exploded_index_layout(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_pre_r12_exploded_index_keeps_one_layout_across_increments(spark):
+    """Increments appended to a pre-r12 exploded index stay in that layout.
+    The index schema comes from one footer, so a mixed index read one
+    layout's rows as nulls: from the second increment on, history written
+    by the first increment (doc 20) never collided."""
+    import shutil
+    import tempfile
+
+    from detector_network_processor_spark.operators.dedup import (
+        band_rows,
+        minhash_signatures,
+    )
+    from detector_network_processor_spark.streaming.dedup import (
+        process_neardup_increment,
+    )
+
+    text_a = "the quick brown fox jumps over the lazy dog and runs far away tonight"
+    text_b = "muon detectors on rooftops record coincident hits from cosmic air showers"
+    schema = "doc_id long, text string"
+    tmp = tempfile.mkdtemp(prefix="dnp_mixidx_")
+    try:
+        band_rows(minhash_signatures(spark.createDataFrame(
+            [(i, text_a) for i in range(4)], schema
+        ))).write.parquet(f"{tmp}/index/ingest_batch=0")
+        for batch_id, docs in ((1, [(20, text_b)]), (2, [(30, text_a), (31, text_b)])):
+            process_neardup_increment(spark, spark.createDataFrame(docs, schema),
+                                      f"{tmp}/index", f"{tmp}/out", batch_id, threshold=0.9)
+        got = {(r.doc_a, r.doc_b)
+               for r in spark.read.parquet(f"{tmp}/out/batch_id=2").collect()}
+        assert got == {(0, 30), (1, 30), (2, 30), (3, 30), (20, 31)}, got
+        for batch_id in (1, 2):
+            cols = spark.read.parquet(f"{tmp}/index/ingest_batch={batch_id}").columns
+            assert sorted(cols) == ["band", "bhash", "doc_id", "signature"], cols
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_streaming_dedup_on_rocksdb_state_store(spark):
     """The production state backend (RocksDB provider + changelog
     checkpointing, streaming/pipeline.py::use_rocksdb_state) must actually
