@@ -1,7 +1,10 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line with per-query wall times (no $SPARK_GRAFT_CPUS: the host's CPU count).
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints a
+detail JSON line, then ONE compact summary JSON line with per-query wall times
+as the final line (no $SPARK_GRAFT_CPUS: the host's CPU count). The detail is
+also written to $BENCH_DETAIL_OUT when that names a file; nothing else is
+written.
 
 Each query is fully materialized (count of collected rows — no driver-side
 result inspection beyond that). Reported time is steady-state: min of
@@ -80,231 +83,6 @@ def needs_escalation(runs: list[float], rel: float = 0.5, abs_spread: float = 1.
         return False
     spread = max(runs) - min(runs)
     return spread / min(runs) > rel or spread > abs_spread
-
-
-def detail_path() -> str:
-    """Per-ROUND detail artifact: ``BENCH_DETAIL_r{N}.json`` where N is the
-    round in progress (1 + the newest COMMITTED ``CORRECTNESS_r*.json`` —
-    committed, not merely on disk: during a round's judging phase the
-    current round's artifact sits on disk uncommitted, and numbering from
-    a filesystem glob wrote that judging rerun into the NEXT round's file,
-    pre-polluting it with the previous round's data — the r8 ADVICE
-    finding). ``SPARK_GRAFT_ROUND`` overrides for explicit runs. Re-runs
-    within a round overwrite the same current-round file; a new round
-    writes a NEW file — so a measurement run never mutates a
-    previously-committed round's evidence. ``BENCH_DETAIL_OUT`` redirects
-    the write entirely, so judge/CI reruns are side-effect-free (an r10
-    judge rerun overwrote the driver's uncommitted detail artifact)."""
-    env_out = os.environ.get("BENCH_DETAIL_OUT")
-    if env_out:
-        return env_out
-    root = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(root, f"BENCH_DETAIL_r{current_round():02d}.json")
-
-
-def _is_committed_clean(path: str) -> bool:
-    """True when ``path`` is git-tracked with no working-tree modification —
-    i.e. overwriting it would clobber COMMITTED evidence. Errs toward True
-    (don't clobber) when git cannot answer."""
-    import subprocess
-
-    d, name = os.path.split(os.path.abspath(path))
-    try:
-        tracked = (
-            subprocess.run(
-                ["git", "-C", d, "ls-files", "--error-unmatch", name],
-                capture_output=True,
-                timeout=10,
-            ).returncode
-            == 0
-        )
-        if not tracked:
-            return False
-        dirty = subprocess.run(
-            ["git", "-C", d, "status", "--porcelain", "--", name],
-            capture_output=True,
-            timeout=10,
-        ).stdout.strip()
-        return not dirty
-    except Exception:  # pragma: no cover — can't tell: be safe
-        return True
-
-
-def resolve_detail_path() -> str:
-    """Non-clobbering detail write target (r11 verdict next-round #6): the
-    r11 driver's bench rerun overwrote the builder's COMMITTED
-    BENCH_DETAIL_r11.json in the working tree — the driver doesn't set
-    BENCH_DETAIL_OUT, and both artifacts should survive. Rule: an explicit
-    BENCH_DETAIL_OUT is always honored verbatim; otherwise, if the
-    current-round target is git-tracked-and-clean (someone already
-    committed it as evidence), divert to the first free suffixed sibling
-    (``..._r12b.json``, ``c``, ...) instead of clobbering. A builder's own
-    in-round reruns still overwrite their uncommitted file, so a round
-    doesn't accumulate one artifact per rerun. prev_round_probe reads only
-    the unsuffixed name, so diverted artifacts never feed normalization."""
-    path = detail_path()
-    if os.environ.get("BENCH_DETAIL_OUT"):
-        return path
-    if not os.path.exists(path) or not _is_committed_clean(path):
-        return path
-    stem = path[: -len(".json")]
-    for suffix in "bcdefghij":
-        cand = f"{stem}{suffix}.json"
-        if not os.path.exists(cand) or not _is_committed_clean(cand):
-            return cand
-    return f"{stem}_overflow.json"  # pragma: no cover — 10 committed reruns
-
-
-def current_round() -> int:
-    """The round in progress (see detail_path); also the anchor for
-    prev_round_probe, which must keep working when BENCH_DETAIL_OUT
-    points the detail write somewhere unparseable."""
-    env_round = os.environ.get("SPARK_GRAFT_ROUND")
-    if env_round and env_round.isdigit():
-        return int(env_round)
-    try:
-        from detector_network_processor_spark.evidence import correctness_files
-
-        rounds = [rnd for rnd, _ in correctness_files(tracked_only=True)]
-        return (max(rounds) + 1) if rounds else 1
-    except Exception:  # pragma: no cover — never fail the bench over naming
-        return 0
-
-
-def _probe_floor(calib: dict, keys: tuple[str, str]) -> float | None:
-    probes = [calib.get(k) for k in keys]
-    probes = [p for p in probes if isinstance(p, (int, float)) and p > 0]
-    return min(probes) if probes else None
-
-
-def prev_round_probe() -> dict | None:
-    """Calibration probe floors of the newest PREVIOUS round's committed
-    BENCH_DETAIL artifact — the denominator for machine noise
-    normalization. Returns ``{"round": N, "probe_min": s, "probe": name,
-    "ext_probe_min": s|None}`` (mins of that round's section-start/end
-    probes, plus the probe's identity so a changed probe plan is never
-    silently compared — r10 ADVICE) or None when no prior detail file
-    carries a usable probe."""
-    root = os.path.dirname(os.path.abspath(__file__))
-    cur = current_round()
-    for n in range(cur - 1, 0, -1):
-        path = os.path.join(root, f"BENCH_DETAIL_r{n:02d}.json")
-        try:
-            with open(path) as f:
-                calib = json.load(f).get("calibration", {})
-            floor = _probe_floor(calib, ("start", "end"))
-            if floor is not None:
-                return {
-                    "round": n,
-                    "probe_min": floor,
-                    "probe": calib.get("probe"),
-                    "ext_probe_min": _probe_floor(calib, ("extended_start", "extended_end")),
-                }
-        except (OSError, ValueError):  # missing/corrupt detail -> keep walking
-            continue
-    return None
-
-
-def noise_normalization(calibration: dict, total: float, prev: dict | None = None) -> dict | None:
-    """Machine-readable round-over-round noise adjudication (r9 verdict
-    next-round #2): this round's probe floor divided by the previous
-    round's, and the headline total divided by that ratio. A
-    probe_ratio_vs_prev well above 1 with a proportionally higher raw
-    total means a slow host window, not a plan regression — r9's +25%
-    'regression' took a judge four artifacts to dismiss by doing exactly
-    this division by hand. The probe (window_sliding_stats min-of-2) is a
-    fixed pure-JVM plan, so its wall moves only with the host —
-    PROVIDED the probe identity matches across rounds: when the previous
-    round ran a different probe plan, the ratio would misattribute plan
-    changes as host noise, so normalization is skipped and the mismatch
-    recorded instead (r10 ADVICE). ``prev`` (prev_round_probe()) may be
-    passed in so one artifact walk serves both normalization helpers."""
-    if prev is None:
-        prev = prev_round_probe()
-    floor = _probe_floor(calibration, ("start", "end"))
-    if prev is None or floor is None:
-        return None
-    if _probe_identity_mismatch(prev, calibration):
-        return {
-            "prev_round": prev["round"],
-            "probe_identity_mismatch": {
-                "prev": prev.get("probe"),
-                "current": calibration.get("probe"),
-            },
-        }
-    ratio = floor / prev["probe_min"]
-    return {
-        "prev_round": prev["round"],
-        "probe": calibration.get("probe"),
-        "prev_probe_min": prev["probe_min"],
-        "probe_min": floor,
-        "probe_ratio_vs_prev": round(ratio, 3),
-        "normalized_total": round(total / ratio, 3),
-    }
-
-
-def _probe_identity_mismatch(prev: dict, calibration: dict) -> bool:
-    return bool(
-        prev.get("probe")
-        and calibration.get("probe")
-        and prev["probe"] != calibration["probe"]
-    )
-
-
-def extended_normalization(
-    calibration: dict, extended: dict, prev: dict | None = None
-) -> dict | None:
-    """Per-ROW noise normalization for the extended section (r10 verdict
-    next-round #5): the total is probe-normalized since r10, but a
-    per-query reader still had to hand-adjudicate rows like bm25 +64% on
-    a fingerprint-identical plan. The extended section is bracketed by
-    its OWN probes (extended_start/end), so its rows get their own ratio
-    (falling back to the headline probe floor for pre-r9 artifacts).
-    Returns ``{"probe_ratio_vs_prev": r, "values": {name: raw/r}}``;
-    error sentinels (<= 0) pass through unscaled. A probe-identity
-    mismatch returns the SAME explicit mismatch block as
-    noise_normalization (no ``values``), so a consumer can tell
-    "deliberately skipped" from "no prior round" (null) — but only when
-    there IS something to normalize: a round with no extended probes at
-    all returns None regardless of probe identity (r11 ADVICE #3; the
-    old order reported the mismatch block where "nothing to normalize"
-    was the accurate verdict). ``prev_floor_source`` records whether the
-    denominator came from the prev round's extended-section probes or —
-    for pre-r9 artifacts that bracketed only the headline — its headline
-    probes, which were measured in a different window slot and mildly
-    bias per-row values."""
-    floor = _probe_floor(calibration, ("extended_start", "extended_end"))
-    if floor is None:
-        return None  # this round has no extended probes: nothing to normalize
-    if prev is None:
-        prev = prev_round_probe()
-    if prev is None:
-        return None
-    if _probe_identity_mismatch(prev, calibration):
-        return {
-            "prev_round": prev["round"],
-            "probe_identity_mismatch": {
-                "prev": prev.get("probe"),
-                "current": calibration.get("probe"),
-            },
-        }
-    prev_floor = prev.get("ext_probe_min")
-    prev_floor_source = "extended"
-    if not prev_floor:
-        prev_floor = prev.get("probe_min")
-        prev_floor_source = "headline"
-    if not prev_floor:
-        return None
-    ratio = floor / prev_floor
-    return {
-        "prev_round": prev["round"],
-        "probe_ratio_vs_prev": round(ratio, 3),
-        "prev_floor_source": prev_floor_source,
-        "values": {
-            name: round(v / ratio, 3) if isinstance(v, (int, float)) and v > 0 else v
-            for name, v in extended.items()
-        },
-    }
 
 
 def _release_cached(spark) -> None:
@@ -511,14 +289,12 @@ def main() -> None:
         "extended_heavy_end": ext_heavy_end,
     }
     # Noise-evidence detail (per-run walls, start offsets, plan Exchange
-    # counts, extended timings): printed FIRST and also written to
-    # BENCH_DETAIL.json. The driver keeps only the LAST 2000 characters of
-    # stdout and parses the final line — round 6's single fat JSON line
-    # exceeded that window and parsed as null, so the headline summary MUST
-    # be the final line and MUST stay compact (well under 1500 chars).
-    prev_probe = prev_round_probe()  # one artifact walk for both helpers
-    normalization = noise_normalization(calibration, total, prev=prev_probe)
-    ext_normalized = extended_normalization(calibration, extended, prev=prev_probe)
+    # counts, extended timings): printed FIRST, and written to the file
+    # $BENCH_DETAIL_OUT names when it is set (a bench run never writes into
+    # the repo). The driver keeps only the LAST 2000 characters of stdout
+    # and parses the final line — round 6's single fat JSON line exceeded
+    # that window and parsed as null, so the headline summary MUST be the
+    # final line and MUST stay compact (well under 1500 chars).
     detail = detail_payload(
         all_runs,
         started_at,
@@ -532,19 +308,12 @@ def main() -> None:
         extended_plan_exchanges,
         extended_meta,
         calibration,
-        normalization,
-        ext_normalized,
     )
     print(json.dumps(detail))
-    out_path = resolve_detail_path()
-    try:
-        with open(out_path, "w") as f:
-            json.dump(detail, f, indent=1)
-    except OSError as e:  # pragma: no cover
-        print(f"# {os.path.basename(out_path)} write failed: {e}", file=sys.stderr)
+    write_detail(detail)
 
     # FINAL stdout line: the compact driver-parseable headline summary.
-    print(summary_line(total, timings, sf, spreads, calibration, extended, normalization))
+    print(summary_line(total, timings, sf, spreads, calibration, extended))
     spark.stop()
 
 
@@ -561,15 +330,11 @@ def detail_payload(
     extended_plan_exchanges: dict,
     extended_meta: dict,
     calibration: dict,
-    noise_normalization: dict | None = None,
-    extended_normalized: dict | None = None,
 ) -> dict:
-    """The BENCH_DETAIL_r{N}.json payload. A pure dict builder so
+    """The detail payload. A pure dict builder so
     tests/test_bench_contract.py can pin the key set (including the
-    extended plan_exchanges + converged-iteration meta added in r9, the
-    probe-normalized round-over-round block added in r10, and the
-    per-row extended normalization added in r11) without running
-    Spark."""
+    extended plan_exchanges + converged-iteration meta added in r9)
+    without running Spark."""
     return {
         "metric": "bench_detail",
         "runs": all_runs,
@@ -587,14 +352,20 @@ def detail_payload(
         "extended_plan_exchanges": extended_plan_exchanges,
         "extended_meta": extended_meta,
         "calibration": calibration,
-        # null when no prior round's detail artifact exists; consumers
-        # treat null as "nothing to normalize against", never an error
-        "noise_normalization": noise_normalization,
-        # per-row extended walls divided by the extended-section probe
-        # ratio — the machine-readable answer to "is bm25 +64% a
-        # regression or a slow window?" (null under the same conditions)
-        "extended_normalized": extended_normalized,
     }
+
+
+def write_detail(detail: dict) -> None:
+    """Write the detail payload to $BENCH_DETAIL_OUT; with the variable
+    unset nothing is written (stdout already carries the payload)."""
+    out_path = os.environ.get("BENCH_DETAIL_OUT")
+    if not out_path:
+        return
+    try:
+        with open(out_path, "w") as f:
+            json.dump(detail, f, indent=1)
+    except OSError as e:  # pragma: no cover
+        print(f"# {out_path} write failed: {e}", file=sys.stderr)
 
 
 def summary_line(
@@ -604,7 +375,6 @@ def summary_line(
     spreads: dict[str, float],
     calibration: dict,
     extended: dict[str, float],
-    noise_normalization: dict | None = None,
 ) -> str:
     """The compact headline summary — MUST stay well under the consumer's
     2000-char stdout-tail window, whatever the query registry grows to
@@ -620,13 +390,6 @@ def summary_line(
         "calibration": calibration,
         "extended": extended,
     }
-    if noise_normalization and "normalized_total" in noise_normalization:
-        # top-level so they survive the calibration/extended shedding:
-        # raw total / probe_ratio_vs_prev = host-noise-corrected total
-        # (absent when the probe identity mismatched — see
-        # noise_normalization)
-        summary["probe_ratio_vs_prev"] = noise_normalization["probe_ratio_vs_prev"]
-        summary["normalized_total"] = noise_normalization["normalized_total"]
     line = json.dumps(summary)
     for drop in ("extended", "calibration"):
         if len(line) <= 1900:

@@ -24,6 +24,7 @@ from __future__ import annotations
 from .config import python_stage_partitions
 
 import argparse
+import math
 import os
 import sys
 
@@ -33,8 +34,10 @@ _CPUS_HELP = "local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())"
 
 def _trigger_seconds(text: str) -> float:
     seconds = float(text)
-    if not seconds >= 0.001:
-        raise argparse.ArgumentTypeError(f"{text!r}: the trigger interval is at least 0.001 s")
+    if not (math.isfinite(seconds) and seconds >= 0.001):
+        raise argparse.ArgumentTypeError(
+            f"{text!r}: the trigger interval is a finite number of at least 0.001 s"
+        )
     return seconds
 
 

@@ -27,37 +27,13 @@ REPO_ROOT = Path(__file__).resolve().parents[1]
 _CORRECTNESS_RE = re.compile(r"CORRECTNESS_r(\d+)\.json$")
 
 
-def correctness_files(
-    root: Path | None = None, tracked_only: bool = False
-) -> list[tuple[int, Path]]:
-    """``tracked_only=True`` restricts to git-COMMITTED artifacts. The
-    round-numbering consumer (bench.detail_path) needs this: a round's
-    correctness artifact sits on disk uncommitted during that round's
-    judging phase, and a filesystem glob would misnumber a bench rerun
-    into the NEXT round's detail file (the committed-but-round-8-data
-    BENCH_DETAIL_r09.json the r8 ADVICE flagged). Falls back to the glob
-    if git is unavailable."""
+def correctness_files(root: Path | None = None) -> list[tuple[int, Path]]:
+    """``(round, path)`` of every ``CORRECTNESS_r*.json`` at ``root``, by round."""
     root = root or REPO_ROOT
-    tracked: set[str] | None = None
-    if tracked_only:
-        import subprocess
-
-        try:
-            res = subprocess.run(
-                ["git", "ls-files", "CORRECTNESS_r*.json"],
-                cwd=root,
-                capture_output=True,
-                text=True,
-                timeout=10,
-            )
-            if res.returncode == 0:
-                tracked = {line.strip() for line in res.stdout.splitlines() if line.strip()}
-        except Exception:
-            tracked = None  # no git — glob fallback below
     out = []
     for p in root.glob("CORRECTNESS_r*.json"):
         m = _CORRECTNESS_RE.search(p.name)
-        if m and (tracked is None or p.name in tracked):
+        if m:
             out.append((int(m.group(1)), p))
     return sorted(out)
 

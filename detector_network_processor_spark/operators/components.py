@@ -39,9 +39,9 @@ isolated CC stage). Skew note: the hot node's rows land on one task under
 BOTH shapes (the join also co-locates its key); the window additionally
 buffers that one group, but via a spillable sorter, and the per-star
 shuffled volume drops ~3x — the right trade at scale. Measured (r13,
-tools/skew_receipt_r13.py): a celebrity node of degree 10^6 completes
-in-memory and FASTER than the join form (45 vs 55 s, 1.5x fewer bytes),
-and with the sorter's spill threshold forced below the hub degree the
+receipt plans/r13/skew_receipt.jsonl): a celebrity node of degree 10^6
+completes in-memory and FASTER than the join form (45 vs 55 s, 1.5x fewer
+bytes), and with the sorter's spill threshold forced below the hub degree the
 spill path engages (1.8 GB) and completes at par wall, bit-identical —
 graceful degradation, no cliff, so no salted two-phase-min fallback is
 needed (that rewrite — partial min on (u, pmod(xxhash64(v), k)) then min

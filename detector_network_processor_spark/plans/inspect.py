@@ -9,7 +9,7 @@ every SF: a future edit that silently adds an exchange (or turns a
 broadcast join into a shuffle join, or introduces a cartesian product)
 changes the fingerprint and fails the regression test.
 
-Used by bench.py (per-round plan_exchanges evidence), by
+Used by bench.py (the plan_exchanges block of its detail JSON), by
 tools/plan_fingerprints.py (regenerates the committed PLAN_FINGERPRINTS.json
 snapshot), and by tests/test_plan_fingerprints.py (the regression gate).
 """

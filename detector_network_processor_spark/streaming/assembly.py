@@ -5,9 +5,11 @@
   include/source/mqtt.h:126-167). Divergence (documented): the reference
   discards partial assemblies after 5 s; registering a processing-time
   timer for that makes availableNow runs re-trigger indefinitely (observed
-  on Spark 4.1), so v1 keeps partials in state until completion —
-  bounded by #stations, so state stays small. Revisit with
-  transformWithStateInPandas timers.
+  on Spark 4.1), so partials stay in state until completion — bounded by
+  #stations, so state stays small. Event-time timers
+  (``transformWithStateInPandas``) would give the reference's discard, but
+  Spark's transformWithState Python protocol needs the ``protobuf``
+  package, which this engine does not depend on.
 - S5 (EAV accumulation): idiomatic Spark — watermark + tumbling window +
   ordered collect; the window close replaces the reference's 5 s commit
   timer (include/source/mqtt.h:250-349).
@@ -28,8 +30,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-ASSEMBLY_TIMEOUT_MS = 5000  # reference: 5 s assembly timeout
 
 
 def stream_kv_assembly(kv: DataFrame, names: list[str]) -> DataFrame:
@@ -84,129 +84,4 @@ def stream_eav_windows(eav: DataFrame, window: str = "5 seconds", watermark: str
             F.concat_ws(",", F.sort_array(F.collect_list(item))).alias("items"),
         )
         .select("hash", F.col("window.start").alias("window_start"), "n_items", "items")
-    )
-
-
-# --------------------------------------------------------------------------
-# S4 with real expiry timers (transformWithStateInPandas, Spark >= 4.0)
-# --------------------------------------------------------------------------
-
-
-def stream_kv_assembly_tws(
-    kv: DataFrame,
-    names: list[str],
-    timeout_ms: int = ASSEMBLY_TIMEOUT_MS,
-    watermark: str = "2 seconds",
-) -> DataFrame:
-    """S4 assembly with the reference's discard-on-timeout semantics
-    (include/source/mqtt.h:126-167: a partial assembly older than 5 s is
-    dropped), implemented with transformWithStateInPandas EVENT-TIME timers:
-
-    - kv: streaming (hash long, ts timestamp, name string, value string).
-    - A partial assembly registers a timer at first_item_ts + timeout; if
-      the watermark passes that point before the bitmask fills, the timer
-      fires and the partial is DISCARDED (no emission) — exactly the
-      reference behavior the applyInPandasWithState variant above documents
-      as a divergence (processing-time timers re-trigger availableNow runs;
-      event-time timers don't, which is why this variant can use them).
-    - Completion emits (hash, values) immediately and deletes the timer.
-
-    Requires the RocksDB state store provider
-    (streaming/pipeline.py::use_rocksdb_state) — transformWithState's
-    column-family state layout is not supported by the default provider.
-
-    ENVIRONMENT GATE: Spark's transformWithState Python protocol speaks
-    protobuf (pyspark/sql/streaming/proto/StateMessage_pb2), and the
-    `protobuf` package is NOT installed in this sandbox (no pip) — the
-    driver worker dies with `ImportError: cannot import name 'descriptor'
-    from 'google.protobuf'` before any user code runs. The test
-    (tests/test_streaming.py::test_tws_kv_assembly_discards_timed_out_partials)
-    importorskips on google.protobuf, exactly like the multimodal decoder
-    stubs; the tested production default remains ``stream_kv_assembly``
-    (applyInPandasWithState, completion-only, documented divergence).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    expected = list(names)
-
-    class KvAssembly(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState(
-                "partial",
-                "names array<string>, vals array<string>, first_ts_ms long",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            got: dict[str, str] = {}
-            first_ts = None
-            if self._state.exists():
-                snames, svals, first_ts = self._state.get()
-                # Input is processed BEFORE expired timers within a
-                # micro-batch: if the stored partial has already aged past
-                # its deadline relative to the current watermark, discard it
-                # NOW — otherwise a late-arriving missing key in this batch
-                # would complete an assembly the reference already dropped.
-                wm = timerValues.getCurrentWatermarkInMs()
-                if wm >= 0 and int(first_ts) + timeout_ms <= wm:
-                    self._state.clear()
-                    self._handle.deleteTimer(int(first_ts) + timeout_ms)
-                    first_ts = None
-                else:
-                    got = dict(zip(snames, svals))
-            completed = []
-            batch = pd.concat(list(rows), ignore_index=True)
-            # deterministic replay order within the micro-batch
-            batch = batch.sort_values(["ts_ms", "name"], kind="mergesort")
-            for name, value, ts_ms in zip(batch["name"], batch["value"], batch["ts_ms"]):
-                if name in expected and name not in got:
-                    if not got:
-                        first_ts = int(ts_ms)
-                    got[str(name)] = str(value)
-                if all(n in got for n in expected):
-                    completed.append([got[n] for n in expected])
-                    got = {}
-                    if first_ts is not None:
-                        self._handle.deleteTimer(first_ts + timeout_ms)
-                    first_ts = None
-            if got:
-                self._state.update((list(got.keys()), list(got.values()), int(first_ts)))
-                self._handle.registerTimer(int(first_ts) + timeout_ms)
-            else:
-                self._state.clear()
-            if completed:
-                yield pd.DataFrame(
-                    {"hash": [key[0]] * len(completed), "values": completed}
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # Discard the partial the fired timer belongs to; a NEWER partial
-            # (started after a completion in the same batch span) carries its
-            # own timer and must survive an older timer's late firing.
-            if self._state.exists():
-                _, _, first_ts = self._state.get()
-                if first_ts + timeout_ms <= expiredTimerInfo.getExpiryTimeInMs():
-                    self._state.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    prepared = kv.withWatermark("ts", watermark).select(
-        "hash",
-        (F.col("ts").cast("double") * 1000).cast("long").alias("ts_ms"),
-        "name",
-        "value",
-    )
-    out_schema = StructType(
-        [StructField("hash", LongType()), StructField("values", ArrayType(StringType()))]
-    )
-    return prepared.groupBy("hash").transformWithStateInPandas(
-        statefulProcessor=KvAssembly(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="eventTime",
     )

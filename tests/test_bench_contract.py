@@ -1,8 +1,9 @@
 """bench.py stdout contract: the FINAL stdout line must be a compact JSON
 summary that survives a consumer keeping only the last 2000 characters of
 stdout (round 6 shipped no parseable headline because a single fat JSON
-line overflowed exactly that window). No Spark session needed — the
-contract is a pure string-building property."""
+line overflowed exactly that window), and the detail JSON is written only
+where BENCH_DETAIL_OUT points. No Spark session needed — the contract is a
+pure string-building property."""
 
 from __future__ import annotations
 
@@ -36,34 +37,6 @@ def test_summary_line_fits_tail_window_and_parses():
     # full form retains the noise-evidence calibration + extended blocks
     assert parsed["calibration"]["probe"] == "window_sliding_stats"
     assert set(parsed["extended"]) == set(bench.EXTENDED)
-
-
-def test_detail_artifact_is_per_round():
-    """The noise-evidence detail must land in a round-suffixed file (one
-    per round, never mutating a previously-committed round's artifact).
-    The round is 1 + the newest COMMITTED correctness artifact — numbering
-    from a filesystem glob wrote a judging-phase rerun into the NEXT
-    round's file while that round's artifact sat on disk uncommitted (the
-    r8 ADVICE pre-pollution finding)."""
-    import os
-    import re
-
-    from detector_network_processor_spark.evidence import correctness_files
-
-    name = os.path.basename(bench.detail_path())
-    m = re.fullmatch(r"BENCH_DETAIL_r(\d+)\.json", name)
-    assert m, name
-    rounds = [rnd for rnd, _ in correctness_files(tracked_only=True)]
-    assert int(m.group(1)) == (max(rounds) + 1 if rounds else 1)
-    # committed-only is a (non-strict) subset of the on-disk glob
-    assert set(correctness_files(tracked_only=True)) <= set(correctness_files())
-
-
-def test_detail_round_env_override(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "42")
-    import os
-
-    assert os.path.basename(bench.detail_path()) == "BENCH_DETAIL_r42.json"
 
 
 def test_detail_payload_key_set():
@@ -100,110 +73,6 @@ def test_summary_line_degrades_instead_of_overflowing():
     assert set(parsed["queries"]) == set(bench.HEADLINE)
 
 
-def test_noise_normalization_against_prev_round_detail(monkeypatch):
-    """BENCH_DETAIL must carry a machine-readable probe normalization so
-    "is this total a regression or a slow host window?" no longer needs a
-    judge dividing probes by hand across four artifacts (r9 verdict
-    next-round #2). Denominator = the newest previous round's committed
-    probe floor."""
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "10")  # prev = BENCH_DETAIL_r09
-    prev = bench.prev_round_probe()
-    assert prev == {
-        "round": 9,
-        "probe_min": 0.219,  # min(0.349, 0.219)
-        "probe": "window_sliding_stats",  # identity travels with the floor
-        "ext_probe_min": 0.168,  # min(0.192, 0.168)
-    }
-    calibration = {"probe": "window_sliding_stats", "start": 0.438, "end": 0.500}
-    norm = bench.noise_normalization(calibration, total=20.0)
-    assert norm["prev_round"] == 9
-    assert norm["probe_ratio_vs_prev"] == 2.0  # 0.438 / 0.219
-    assert norm["normalized_total"] == 10.0  # 20.0 / 2.0
-    # payload carries the block (null allowed only when no prior round)
-    payload = bench.detail_payload(
-        {}, {}, {}, 3, 5, {}, {}, {}, {}, {}, {}, {"probe": "x"}, norm
-    )
-    assert payload["noise_normalization"]["normalized_total"] == 10.0
-
-
-def test_noise_normalization_skipped_on_probe_identity_change(monkeypatch):
-    """If the calibration probe PLAN differs from the previous round's,
-    dividing their floors would misattribute a plan change as host noise
-    (r10 ADVICE): normalization must be skipped with the mismatch
-    recorded, and the summary line must omit normalized_total."""
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "10")
-    calibration = {"probe": "some_new_probe", "start": 0.438, "end": 0.500}
-    norm = bench.noise_normalization(calibration, total=20.0)
-    assert "normalized_total" not in norm
-    assert norm["probe_identity_mismatch"] == {
-        "prev": "window_sliding_stats",
-        "current": "some_new_probe",
-    }
-    timings, spreads, extended, _ = _fake_inputs()
-    line = bench.summary_line(10.0, timings, 0.1, spreads, calibration, extended, norm)
-    parsed = json.loads(line)
-    assert "normalized_total" not in parsed
-    # a round with NO extended probes has nothing to normalize: None is
-    # the accurate verdict even when the probe name also changed (r11
-    # ADVICE #3 — the old order reported the mismatch block here)
-    assert bench.extended_normalization(calibration, extended) is None
-    # WITH extended probes, the same explicit mismatch block as
-    # noise_normalization (distinguishable from the "no prior round" null)
-    calibration_ext = dict(calibration, extended_start=0.3, extended_end=0.3)
-    ext = bench.extended_normalization(calibration_ext, extended)
-    assert "values" not in ext
-    assert ext["probe_identity_mismatch"]["current"] == "some_new_probe"
-
-
-def test_extended_rows_normalized_per_query(monkeypatch):
-    """Extended rows get their OWN probe-ratio normalization (r11, r10
-    verdict next-round #5) using the extended-section probes, so a
-    per-query reader no longer hand-adjudicates bm25-style noise rows."""
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "10")  # prev ext floor = 0.168
-    calibration = {
-        "probe": "window_sliding_stats",
-        "start": 0.2,
-        "end": 0.2,
-        "extended_start": 0.336,  # 2x the r09 extended floor
-        "extended_end": 0.4,
-    }
-    extended = {"bm25_search": 2.8, "broken_query": -1.0}
-    ext_norm = bench.extended_normalization(calibration, extended)
-    assert ext_norm["prev_round"] == 9
-    assert ext_norm["probe_ratio_vs_prev"] == 2.0  # 0.336 / 0.168
-    assert ext_norm["prev_floor_source"] == "extended"  # true ext-vs-ext ratio
-    assert ext_norm["values"]["bm25_search"] == 1.4  # 2.8 / 2.0
-    assert ext_norm["values"]["broken_query"] == -1.0  # sentinel unscaled
-    # a pre-r9 denominator (no extended probes in the prev artifact) falls
-    # back to the prev HEADLINE floor and says so — that floor was measured
-    # in a different window slot, so the tag flags the mild bias
-    prev_headline_only = {"round": 7, "probe_min": 0.168, "probe": "window_sliding_stats"}
-    ext_fb = bench.extended_normalization(calibration, extended, prev=prev_headline_only)
-    assert ext_fb["prev_floor_source"] == "headline"
-    assert ext_fb["probe_ratio_vs_prev"] == 2.0
-    payload = bench.detail_payload(
-        {}, {}, {}, 3, 5, {}, extended, {}, {}, {}, {}, calibration, None, ext_norm
-    )
-    assert payload["extended_normalized"]["values"]["bm25_search"] == 1.4
-
-
-def test_detail_out_env_redirects_write_only(monkeypatch, tmp_path):
-    """BENCH_DETAIL_OUT points the detail write elsewhere (side-effect-free
-    judge reruns, r10 verdict stretch #8) WITHOUT breaking round
-    detection: prev_round_probe must still find the r09 artifact."""
-    monkeypatch.setenv("BENCH_DETAIL_OUT", str(tmp_path / "judge_rerun.json"))
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "10")
-    assert bench.detail_path() == str(tmp_path / "judge_rerun.json")
-    prev = bench.prev_round_probe()
-    assert prev is not None and prev["round"] == 9
-
-
-def test_noise_normalization_missing_prev_is_none(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "1")  # no round 0 artifact
-    assert bench.prev_round_probe() is None
-    assert bench.noise_normalization({"start": 0.2, "end": 0.2}, 5.0) is None
-
-
 def test_spread_escalation_has_an_absolute_arm():
     """r11 What's-wrong #3: bm25 read 4.50/5.79 — a 1.30 s spread a
     same-session hypervisor spike can straddle — yet relative spread
@@ -218,65 +87,45 @@ def test_spread_escalation_has_an_absolute_arm():
     assert not bench.needs_escalation([4.50])  # one sample: nothing to judge
 
 
-def test_detail_write_never_clobbers_committed_evidence(monkeypatch, tmp_path):
-    """r11 verdict next-round #6: the driver's bench rerun overwrote the
-    builder's COMMITTED BENCH_DETAIL_r11.json. When the current-round
-    target is git-tracked-and-clean the write must divert to a suffixed
-    sibling; an uncommitted (or dirty) target — the builder's own in-round
-    rerun — still overwrites in place."""
-    import os
-
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "42")
-    base = os.path.join(os.path.dirname(os.path.abspath(bench.__file__)),
-                        "BENCH_DETAIL_r42.json")
-    # no file on disk -> the unsuffixed round path
-    assert bench.resolve_detail_path() == base
-
-    # target exists but is NOT committed-clean -> overwrite in place
-    monkeypatch.setattr(bench.os.path, "exists", lambda p: p == base)
-    monkeypatch.setattr(bench, "_is_committed_clean", lambda p: False)
-    assert bench.resolve_detail_path() == base
-
-    # target committed-clean -> divert to the first free suffix
-    monkeypatch.setattr(bench, "_is_committed_clean", lambda p: p == base)
-    assert bench.resolve_detail_path() == base[: -len(".json")] + "b.json"
-
-    # explicit BENCH_DETAIL_OUT always honored verbatim, even onto an
-    # existing path (the judge owns that decision)
-    monkeypatch.setenv("BENCH_DETAIL_OUT", str(tmp_path / "x.json"))
-    assert bench.resolve_detail_path() == str(tmp_path / "x.json")
-
-
-def test_is_committed_clean_on_real_repo_files():
-    """Grounding for the clobber guard: a committed artifact reads True,
-    an untracked path False (run against the real repo's git state)."""
-    import os
-
-    root = os.path.dirname(os.path.abspath(bench.__file__))
-    committed = os.path.join(root, "BENCH_DETAIL_r11.json")
-    if os.path.exists(committed):
-        import subprocess
-
-        dirty = subprocess.run(
-            ["git", "-C", root, "status", "--porcelain", "--", committed],
-            capture_output=True,
-        ).stdout.strip()
-        if not dirty:
-            assert bench._is_committed_clean(committed)
-    assert not bench._is_committed_clean(os.path.join(root, "no_such_file.json"))
-
-
-def test_summary_line_carries_normalized_total():
+def test_summary_line_has_only_single_run_keys():
+    """The final line and the detail describe this run alone: no ratio
+    against an earlier run's probe floor (a floor measured on another host
+    says nothing about this one)."""
     timings, spreads, extended, calibration = _fake_inputs()
-    norm = {
-        "prev_round": 9,
-        "prev_probe_min": 0.219,
-        "probe_min": 0.438,
-        "probe_ratio_vs_prev": 2.0,
-        "normalized_total": 5.0,
+    parsed = json.loads(bench.summary_line(10.0, timings, 0.1, spreads, calibration, extended))
+    assert {"metric", "value", "unit", "queries", "extended"} <= set(parsed)
+    assert not {"probe_ratio_vs_prev", "normalized_total"} & set(parsed)
+    payload = bench.detail_payload({}, {}, {}, 3, 5, {}, {}, {}, {}, {}, {}, calibration)
+    assert set(payload) == {
+        "metric", "runs", "query_start_offsets_sec", "spread",
+        "runs_per_query", "runs_noisy_max", "plan_exchanges",
+        "extended", "extended_spread", "extended_runs",
+        "extended_plan_exchanges", "extended_meta", "calibration",
     }
-    line = bench.summary_line(10.0, timings, 0.1, spreads, calibration, extended, norm)
-    assert len(line) <= 1900
-    parsed = json.loads(line)
-    assert parsed["normalized_total"] == 5.0
-    assert parsed["probe_ratio_vs_prev"] == 2.0
+
+
+def test_detail_written_only_to_bench_detail_out(monkeypatch, tmp_path):
+    """The detail JSON lands at $BENCH_DETAIL_OUT; with the variable unset
+    no file is written, neither in the working directory nor in the repo."""
+    import os
+
+    detail = bench.detail_payload({}, {}, {}, 3, 5, {}, {}, {}, {}, {}, {}, {"probe": "x"})
+    out = tmp_path / "out" / "detail.json"
+    out.parent.mkdir()
+    monkeypatch.setenv("BENCH_DETAIL_OUT", str(out))
+    bench.write_detail(detail)
+    assert json.loads(out.read_text()) == detail
+
+    repo = os.path.dirname(os.path.abspath(bench.__file__))
+
+    def details():
+        return {n for n in os.listdir(repo) if n.startswith("BENCH_DETAIL")}
+
+    repo_before = details()
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    monkeypatch.delenv("BENCH_DETAIL_OUT")
+    bench.write_detail(detail)
+    assert list(cwd.iterdir()) == []
+    assert details() == repo_before

@@ -675,79 +675,6 @@ def test_stream_coincidence_rocksdb_state_store(spark):
     assert cs == cb
 
 
-def test_tws_kv_assembly_discards_timed_out_partials(spark):
-    """S4 with event-time timers (transformWithStateInPandas): a partial
-    assembly whose timeout passes (watermark-driven) is DISCARDED — the
-    late-arriving missing key starts a fresh assembly instead of completing
-    the stale one (reference include/source/mqtt.h:126-167 semantics)."""
-    import shutil
-    import tempfile
-
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's Python protocol requires protobuf, absent "
-        "in this sandbox (no pip) — see stream_kv_assembly_tws docstring",
-    )
-
-    import pyspark.sql.functions as F
-
-    from detector_network_processor_spark.streaming.assembly import stream_kv_assembly_tws
-    from detector_network_processor_spark.streaming.pipeline import use_rocksdb_state
-
-    use_rocksdb_state(spark)
-    base = 1_700_000_000
-    rows = [
-        # station 1: two keys, then silence past the 5 s timeout
-        (1, base + 0, "lat", "1"),
-        (1, base + 1, "lon", "2"),
-        # station 3 completes quickly -> must emit
-        (3, base + 2, "lat", "30"),
-        (3, base + 2, "lon", "31"),
-        (3, base + 3, "alt", "32"),
-        # watermark mover far past station 1's timeout
-        (2, base + 20, "lat", "x"),
-        # station 1's missing key arrives AFTER its partial timed out ->
-        # starts a fresh assembly...
-        (1, base + 21, "alt", "3"),
-        # ...which completes with the NEW lat/lon, not the stale ones
-        (1, base + 22, "lat", "9"),
-        (1, base + 23, "lon", "8"),
-        # final watermark mover so every batch flushes
-        (2, base + 40, "lon", "y"),
-    ]
-    tmp = tempfile.mkdtemp(prefix="dnp_tws_")
-    try:
-        schema = "hash long, ts_s long, name string, value string"
-        for i, r in enumerate(rows):
-            spark.createDataFrame([r], schema).coalesce(1).write.parquet(f"{tmp}/in/f{i:02d}")
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/in/f*")
-            .withColumn("ts", F.timestamp_seconds("ts_s"))
-            .select("hash", "ts", "name", "value")
-        )
-        q = (
-            stream_kv_assembly_tws(stream, ["lat", "lon", "alt"], timeout_ms=5000)
-            .writeStream.format("memory")
-            .queryName("tws_kv")
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        got = {r["hash"]: list(r["values"]) for r in spark.sql("select * from tws_kv").collect()}
-        assert got[3] == ["30", "31", "32"]
-        # stale lat=1/lon=2 must NOT appear: the timed-out partial was dropped
-        assert got[1] == ["9", "8", "3"]
-        assert set(got) == {1, 3}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_stream_detector_summaries_matches_batch(spark):
     """Streaming A5 == batch detector_summaries for every window the
     stream has CLOSED (a station's final open window emits only on the
