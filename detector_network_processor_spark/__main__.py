@@ -32,11 +32,23 @@ import sys
 _CPUS_HELP = "local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())"
 
 
+# Spark holds a processing-time interval in microseconds, in a signed 64-bit long
+_MAX_TRIGGER_MS = (2**63 - 1) // 1000
+
+
+def _trigger_ms(seconds: float) -> int:
+    """The interval in the whole milliseconds Spark is given."""
+    return round(seconds * 1000)
+
+
 def _trigger_seconds(text: str) -> float:
     seconds = float(text)
-    if not (math.isfinite(seconds) and seconds >= 0.001):
+    if not (
+        math.isfinite(seconds) and seconds >= 0.001 and _trigger_ms(seconds) <= _MAX_TRIGGER_MS
+    ):
         raise argparse.ArgumentTypeError(
-            f"{text!r}: the trigger interval is a finite number of at least 0.001 s"
+            f"{text!r}: the trigger interval is a finite number of at least 0.001 s "
+            f"and at most {_MAX_TRIGGER_MS} ms (Spark's interval limit)"
         )
     return seconds
 
@@ -57,7 +69,7 @@ def _with_trigger(writer, args):
     if args.available_now:
         return writer.trigger(availableNow=True)
     if args.trigger_seconds:
-        return writer.trigger(processingTime=f"{round(args.trigger_seconds * 1000)} milliseconds")
+        return writer.trigger(processingTime=f"{_trigger_ms(args.trigger_seconds)} milliseconds")
     return writer
 
 

@@ -285,10 +285,7 @@ def exact_ntile(
         )
     pin_input = True if pin_input is None else pin_input
     if pin_input and not verify_counts:
-        from ..session import pin_storage_level
-
-        lvl = pin_storage_level(spark)
-        src = df.persist(lvl) if lvl is not None else df.persist()
+        src = df.persist()
     else:
         # verify_counts implies UNPINNED input: Spark's cache is keyed on
         # the logical plan, so with a persisted src the verify pass would

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..io import load_table
 from . import register
 from ..config import python_stage_partitions
-from ..session import pin_storage_level
 
 _STOPWORDS = ("the", "a", "of", "and")
 
@@ -316,14 +315,8 @@ def near_dup_jaccard_plan(
     # materialized by the two concurrent broadcast-collection jobs below,
     # which each recompute the full lineage (measured 2x wall cost). At
     # cluster scale this is a persist()-class materialization of an
-    # O(corpus tokens) intermediate — bounded and local to executors. The
-    # storage level of this and the other O(corpus) pins below is
-    # session-tunable (session.pin_storage_level): DISK_ONLY removes the
-    # 64 GB-driver cliff in memory-constrained local sweeps.
-    _pin = pin_storage_level(spark)
-    shingles = staged.select("doc_id", shingle.alias("sh")).localCheckpoint(
-        eager=True, storageLevel=_pin
-    )
+    # O(corpus tokens) intermediate — bounded and local to executors.
+    shingles = staged.select("doc_id", shingle.alias("sh")).localCheckpoint(eager=True)
     sizes = shingles.select("doc_id", F.size("sh").alias("n_sh"))
     posting = shingles.select("doc_id", F.explode("sh").alias("shash"))
     if max_df is None:
@@ -382,9 +375,7 @@ def near_dup_jaccard_plan(
     # = (n_docs * shingles_per_doc) / (CAP_FRAC * n_docs), i.e. bounded by
     # shingles_per_doc / CAP_FRAC rows INDEPENDENT of corpus size — unlike
     # the O(n_docs) per-doc tables below, which carry no hint.
-    kept = posting.join(F.broadcast(hot), "shash", "left_anti").localCheckpoint(
-        eager=True, storageLevel=_pin
-    )
+    kept = posting.join(F.broadcast(hot), "shash", "left_anti").localCheckpoint(eager=True)
     ka = kept.select(F.col("doc_id").alias("doc_a"), "shash")
     kb = kept.select(F.col("doc_id").alias("doc_b"), "shash")
     kc = (
@@ -424,7 +415,7 @@ def near_dup_jaccard_plan(
         .filter(ub * _JACCARD_DEN > ub_union * _JACCARD_NUM)
         .select("doc_a", "doc_b")
         # feeds the surviving-doc semi-filter AND the rescore join
-        .localCheckpoint(eager=True, storageLevel=_pin)
+        .localCheckpoint(eager=True)
     )
     cand_docs = (
         cand.select(F.col("doc_a").alias("doc_id"))
@@ -2013,15 +2004,10 @@ def lm_scores_unordered(
     # job's scheduling + block-store round trip for the same compute
     # (both ccnet modes run a statistics pass first, which fuses the
     # corpus explode into itself this way).
-    # docbg is an O(corpus x distinct-bigrams) pin — at 5M docs it is
-    # ~1G rows, which under the default MEMORY_AND_DISK unroll OOMs the
-    # default 8 GB session (measured in the r10 1000x sweep); it honours
-    # the session pin knob exactly like the jaccard family's O(corpus)
-    # checkpoints (spark.dnp.pinStorage=DISK_ONLY in the scale sweeps)
     docbg = (
         grams.groupBy("doc_id", "lang", "bg")
         .agg(F.count(F.lit(1)).alias("dc"))
-        .localCheckpoint(eager=False, storageLevel=pin_storage_level(spark))
+        .localCheckpoint(eager=False)
     )
     counts = docbg.groupBy("lang", "bg").agg(F.sum("dc").alias("c"))
     lang_tot = counts.groupBy("lang").agg(

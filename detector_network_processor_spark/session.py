@@ -14,6 +14,15 @@ from pyspark.sql import SparkSession
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _persistent_rdds(sc) -> dict:
+    """Every RDD the JVM holds persisted, as {rdd id: JavaRDD handle}.
+
+    The engine's one read of private JVM surface (``JavaSparkContext.
+    getPersistentRDDs``, reached through ``sc._jsc``); a Spark upgrade that
+    moves it breaks here and in tests/test_ckpt_release.py."""
+    return dict(sc._jsc.getPersistentRDDs())
+
+
 def release_cached(
     spark: SparkSession, jvm_gc: bool = False, settle_sec: float = 0.0, blocking: bool = False
 ) -> None:
@@ -31,7 +40,7 @@ def release_cached(
     import time
 
     spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+    for rdd in _persistent_rdds(spark.sparkContext).values():
         rdd.unpersist(blocking)
     if jvm_gc:
         spark.sparkContext._jvm.System.gc()
@@ -52,9 +61,9 @@ def eager_ckpt_tracked(df):
     (as is plan fingerprinting), so no concurrent checkpoint can leak into
     the diff."""
     sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keys())
+    before = _persistent_rdds(sc)
     ck = df.localCheckpoint(eager=True)
-    handles = [jrdd for rid, jrdd in sc._jsc.getPersistentRDDs().items() if rid not in before]
+    handles = [jrdd for rid, jrdd in _persistent_rdds(sc).items() if rid not in before]
     return ck, handles
 
 
@@ -67,37 +76,6 @@ def release_ckpts(handles: list) -> None:
             h.unpersist(False)
         except Exception:  # pragma: no cover — release is best-effort
             pass
-
-
-def pin_storage_level(spark: SparkSession):
-    """Storage level for BIG working-set pins — the eager localCheckpoints
-    of O(corpus)-sized intermediates (shingle arrays, kept postings).
-
-    Returns ``None`` by default, which keeps Spark's localCheckpoint
-    default (MEMORY_AND_DISK, deserialized): fastest when the pin fits, and
-    the right call on a real cluster where the working set spreads across
-    executors. Set ``spark.dnp.pinStorage=DISK_ONLY`` (session conf) or
-    ``DNP_PIN_STORAGE=DISK_ONLY`` (env) for memory-constrained runs —
-    local mode conflates driver and executor heap, and at 1000x fixture
-    scale the deserialized in-memory pins plus the aggregation working set
-    exceed the default 8 GB session unless the pins go straight to disk
-    (measured: SCALE_RESULTS_r7.json needed a 64 GB driver without this).
-    Small dimension pins (centroids, boundary offsets) deliberately do not
-    consult this knob."""
-    name = None
-    try:
-        name = spark.conf.get("spark.dnp.pinStorage", None)
-    except Exception:
-        pass
-    name = name or os.environ.get("DNP_PIN_STORAGE")
-    if not name:
-        return None
-    from pyspark import StorageLevel
-
-    level = getattr(StorageLevel, name.upper(), None)
-    if level is None:
-        raise ValueError(f"unknown spark.dnp.pinStorage level: {name!r}")
-    return level
 
 
 def get_spark(

@@ -130,9 +130,7 @@ def collision_pairs(
 
     ``new_bands`` / ``hist_bands``: (id_col, signature, band, bhash) rows
     (``hist_bands`` None when no history exists yet). Returns
-    (doc_a, doc_b, est_jaccard) with est >= threshold, one row per pair.
-    Shared by process_neardup_increment and tools/neardup_decompose.py —
-    the decomposition tool times exactly this plan, by construction."""
+    (doc_a, doc_b, est_jaccard) with est >= threshold, one row per pair."""
     from ..operators.dedup import MINHASH_K
 
     agree = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))

@@ -131,8 +131,8 @@ def _offset_conf(ckpt, batch_id):
 
 def test_stream_trigger_seconds_accepts_fractions():
     """--trigger-seconds takes the reference's 100 ms flush tick; whole
-    seconds parse as before; an interval under 1 ms or an infinite one is
-    refused."""
+    seconds parse as before; an interval under 1 ms, an infinite one, or
+    one past Spark's interval limit is refused."""
     import pytest
 
     from detector_network_processor_spark.__main__ import _build_parser
@@ -142,7 +142,10 @@ def test_stream_trigger_seconds_accepts_fractions():
     assert p.parse_args(argv + ["--trigger-seconds", "0.1"]).trigger_seconds == 0.1
     assert p.parse_args(argv + ["--trigger-seconds", "3"]).trigger_seconds == 3
     assert p.parse_args(argv).trigger_seconds is None
-    for bad in ("0", "-1", "0.0001", "inf"):
+    # Spark's ceiling: the interval in microseconds fits a signed 64-bit long
+    top = p.parse_args(argv + ["--trigger-seconds", "9223372036854"])
+    assert top.trigger_seconds == 9223372036854
+    for bad in ("0", "-1", "0.0001", "inf", "1e20", "9223372036855"):
         with pytest.raises(SystemExit):
             p.parse_args(argv + ["--trigger-seconds", bad])
 
@@ -171,7 +174,9 @@ def test_ingest_trigger_seconds_matches_stream():
     drain = p.parse_args(argv + ["--trigger-seconds", "5", "--available-now"])
     assert _with_trigger(Writer(), drain).kw == {"availableNow": True}
     assert _with_trigger(Writer(), p.parse_args(argv)).kw is None
-    for bad in ("0", "-1", "0.0001", "inf"):
+    top = p.parse_args(argv + ["--trigger-seconds", "9223372036854"])
+    assert _with_trigger(Writer(), top).kw == {"processingTime": "9223372036854000 milliseconds"}
+    for bad in ("0", "-1", "0.0001", "inf", "1e20", "9223372036855"):
         with pytest.raises(SystemExit):
             p.parse_args(argv + ["--trigger-seconds", bad])
 

@@ -372,28 +372,6 @@ def test_streaming_dedup_on_rocksdb_state_store(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_decompose_tool_matches_replay_output(spark):
-    """tools/neardup_decompose.py re-times the replay's exact dataflow; if
-    the harness in plans/llm.py or streaming/dedup.py changes shape, the
-    tool's pair count must move with it — this pins the lockstep so the
-    SCALING.md decomposition can't silently describe a stale pipeline."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from neardup_decompose import replay_timed
-
-    from detector_network_processor_spark.plans import all_queries
-
-    sf = "/root/testdata/sf0.001"
-    res = replay_timed(spark, sf)
-    want = all_queries()["neardup_incremental_replay"].fn(spark, sf).count()
-    assert res["n_pairs"] == want
-    assert set(res) == {
-        "signatures", "pairs_join_write", "index_write", "assembly", "total", "n_pairs",
-    }
-
-
 def test_increment_write_failure_propagates(spark, monkeypatch):
     """r12: the increment's two terminal writes run as concurrent jobs
     (guide §2.6 overlap); the futures must be JOINED with exceptions

@@ -1,9 +1,9 @@
-"""Every kept script loads: each `tools/*.py`, `bench.py` and
-`scale_bench.py` is executed by file path (its `__main__` guard keeps
-Spark from starting), so a deleted or renamed library symbol a script
-imports fails here instead of on the next manual run. Imports inside
-function bodies, and attributes read off an imported repo module
-(`scale_bench.build_scaled`), are resolved too."""
+"""Every kept script loads: each `tools/*.py` and `bench.py` is executed
+by file path (its `__main__` guard keeps Spark from starting), so a
+deleted or renamed library symbol a script imports fails here instead of
+on the next manual run. Imports inside function bodies, and attributes
+read off an imported repo module (`bench.main` after `import bench`),
+are resolved too."""
 
 from __future__ import annotations
 
@@ -16,8 +16,8 @@ from pathlib import Path
 import pytest
 
 REPO = Path(__file__).resolve().parents[1]
-SCRIPTS = sorted(REPO.glob("tools/*.py")) + [REPO / "bench.py", REPO / "scale_bench.py"]
-_LOCAL = ("detector_network_processor_spark", "tools", "bench", "scale_bench")
+SCRIPTS = sorted(REPO.glob("tools/*.py")) + [REPO / "bench.py"]
+_LOCAL = ("detector_network_processor_spark", "tools", "bench")
 
 
 def _is_local(module: str) -> bool:
