@@ -14,11 +14,10 @@ dataclass with three constructors:
 - ``EngineConfig.from_env(prefix="DNP_")`` — every key overridable via
   ``DNP_<UPPERCASE_KEY>`` for container deployments.
 
-Spark-specific knobs live in the same place so there is ONE config point:
-``python_stage_partitions`` pins the width of CPU-bound Python stages
-(Arrow kernels behind repartition barriers) — ``None`` defers to
-``sparkContext.defaultParallelism``, which matches cores locally but may
-undershoot a 100 TB replay on a large cluster; set it explicitly there.
+The fields are exactly the reference's keys; no Spark-side knob joins
+them. ``python_stage_partitions`` names the one Spark-side sizing
+decision, the width of CPU-bound Python stages (Arrow kernels behind
+repartition barriers), and fixes it at ``sparkContext.defaultParallelism``.
 """
 
 from __future__ import annotations
@@ -27,10 +26,6 @@ import os
 from dataclasses import dataclass, fields, replace
 
 from pyspark.sql import SparkSession
-
-# Spark conf key consulted by python_stage_partitions(); lets a cluster
-# operator size Python stages per-session without touching code.
-PY_STAGE_CONF_KEY = "spark.engine.pythonStagePartitions"
 
 
 @dataclass(frozen=True)
@@ -55,9 +50,6 @@ class EngineConfig:
     geohash_length: int = 6
     clusterlog_interval_s: int = 60
     detectorsummary_interval_s: int = 120
-    # Spark engine knob (no reference analog): width of pinned Python
-    # stages; None -> defaultParallelism at call time.
-    python_stage_partitions: int | None = None
 
     # -- constructors -----------------------------------------------------
 
@@ -103,7 +95,7 @@ class EngineConfig:
             f = by_name.get(name)
             if f is None or val == "":
                 continue
-            if f.type in ("int", "int | None"):
+            if f.type == "int":
                 iv = int(val)
                 if key in minute_keys:
                     iv *= 60
@@ -115,19 +107,10 @@ class EngineConfig:
         return replace(self, **updates)
 
 
-def python_stage_partitions(spark: SparkSession, cfg: EngineConfig | None = None) -> int:
+def python_stage_partitions(spark: SparkSession) -> int:
     """The single sizing point for pinned CPU-bound Python stages
-    (coincidence kernel, lifecycle replay, curation Arrow passes).
-
-    Resolution order: explicit EngineConfig -> the
-    ``spark.engine.pythonStagePartitions`` session conf ->
-    ``defaultParallelism``. The pinned repartition exists to stop AQE
-    coalescing these stages by shuffle BYTES (they are CPU-bound, not
-    IO-bound); on a real cluster set the conf to a multiple of total cores.
-    """
-    if cfg is not None and cfg.python_stage_partitions is not None:
-        return int(cfg.python_stage_partitions)
-    v = spark.conf.get(PY_STAGE_CONF_KEY, None)
-    if v is not None:
-        return int(v)
+    (coincidence kernel, lifecycle replay, curation Arrow passes):
+    ``defaultParallelism``, one task per core. The pinned repartition
+    exists to stop AQE coalescing these stages by shuffle BYTES (they are
+    CPU-bound, not IO-bound)."""
     return spark.sparkContext.defaultParallelism

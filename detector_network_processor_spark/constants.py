@@ -48,10 +48,6 @@ LOG_INTERVAL_S = 90
 OFFLINE_INTERVAL_S = 270
 QUIT_INTERVAL_S = 48 * 3600
 
-# Wrapping hardware counter modulus note: the reference wraps with
-# cur + (65535 - last) when cur <= last (detectorstation.cpp:37-48).
-U16_MAX = 65535
-
 # WGS84 ellipsoid (public constants) for geodetic -> ECEF conversion.
 WGS84_A = 6378137.0
 WGS84_F = 1.0 / 298.257223563

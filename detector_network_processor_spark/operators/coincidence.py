@@ -66,9 +66,6 @@ L1_SCHEMA = StructType(
     ]
 )
 
-_EVENT_COLS = ("hash", "start", "end", "time_acc", "ublox_counter", "fix", "lat", "lon", "h")
-
-
 _MATRIX_MIN_N = 6  # below this, matrix setup costs more than it saves
 
 # Largest session size resolved by the closed-form JVM path (guide §4 —

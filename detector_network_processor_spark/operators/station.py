@@ -33,8 +33,6 @@ TRANSITION_SCHEMA = StructType(
     ]
 )
 
-_MERGED_COLS = ["hash", "ts", "kind", "end", "time_acc", "ublox_counter", "fix", "dop", "h_acc", "v_acc"]
-
 
 def merge_station_records(logs: DataFrame, events: DataFrame | None = None) -> DataFrame:
     """Union logs + events into the canonical merged record shape consumed

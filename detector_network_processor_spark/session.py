@@ -81,14 +81,11 @@ def release_ckpts(handles: list) -> None:
 def get_spark(
     app_name: str = "detector-network-processor-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     warehouse_dir: str | None = None,
 ) -> SparkSession:
-    """``local[cpus]`` session; ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``,
-    else the host's CPU count, and the shuffle partition count to
-    ``$SPARK_SHUFFLE_PARTITIONS``, else ``cpus``."""
+    """``local[cpus]`` session with one shuffle partition per core; ``cpus``
+    defaults to ``$SPARK_GRAFT_CPUS``, else the host's CPU count."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(cpus)))
     builder = SparkSession.builder.master(f"local[{cpus}]")
     if warehouse_dir is not None:
         # Bucketed catalog tables land under the warehouse dir; callers that
@@ -97,7 +94,7 @@ def get_spark(
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
     return (
         builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # respect the advisory partition size rather than max parallelism

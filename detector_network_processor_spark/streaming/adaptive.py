@@ -14,7 +14,9 @@ the next increment's horizon delay — a live feedback loop, Spark-first:
   event-time bucketing of the micro-batch is the deterministic analog).
 - W2 factor: per-station event counts per 30 s interval are carried in a
   small parquet state (O(stations × history) rows — distributed, only
-  scalars ever reach the driver); the dip test
+  scalars ever reach the driver), versioned by batch id like the
+  incremental clusterer's open tail, so a foreachBatch replay of batch N
+  re-reads the version batch N read and counts nothing twice; the dip test
   ``cur < mean - sigma  →  ((mean-cur)/sigma + 1) * 2`` runs over the
   trailing 10 intervals and the cluster-wide factor is the max.
 - W3 timeout: ``clamp(timebase * factor, 2 s, 30 min)`` becomes the
@@ -27,8 +29,6 @@ the next increment's horizon delay — a live feedback loop, Spark-first:
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -40,6 +40,7 @@ from ..operators.timebase import (
     TIMEOUT_MAX_NS,
     TIMEOUT_MIN_NS,
 )
+from .incremental import _prune_versions, _state_versions, _version_dir, process_increment
 
 RATE_INTERVAL_NS = 30 * NS
 RATE_HISTORY = 10
@@ -48,10 +49,14 @@ RATE_HISTORY = 10
 class AdaptiveTimeoutController:
     """Per-micro-batch W1-W3 evaluation with carried rate state.
 
-    ``update(batch)`` ingests one increment's rows (needs ``hash`` and
-    ``start`` in ns) and returns the group-timeout/horizon delay in ns for
-    the next increment. All per-station work is distributed; exactly two
-    scalars (span, max factor) are collected per call.
+    ``update(batch, batch_id)`` ingests one increment's rows (needs
+    ``hash`` and ``start`` in ns) and returns the group-timeout/horizon
+    delay in ns for the next increment. All per-station work is
+    distributed; exactly two scalars (span, max factor) are collected per
+    call. The rate table is read from the newest version below
+    ``batch_id`` and written as version ``batch_id``, so replaying a batch
+    id gives the same factor. ``timeout_ns`` itself lives in driver memory
+    and starts again from ``TIMEOUT_MIN_NS`` in a new controller.
     """
 
     def __init__(self, spark: SparkSession, state_path: str):
@@ -61,7 +66,7 @@ class AdaptiveTimeoutController:
         self.last_timebase_ns: int | None = None
         self.last_factor: float | None = None
 
-    def update(self, batch: DataFrame) -> int:
+    def update(self, batch: DataFrame, batch_id: int) -> int:
         spark = self.spark
         # W1: span of the most recent 2 s sample bucket in this increment
         # (timebase.cpp:17-45 keeps the latest sample's observed span)
@@ -77,12 +82,15 @@ class AdaptiveTimeoutController:
         timebase_ns = min(TIMEBASE_MAX_NS, max(TIMEBASE_MIN_NS, int(span_row[0]["span"])))
 
         # W2: fold this increment's per-station interval counts into the
-        # carried rate table, prune to the trailing history window
+        # rate table version it follows, prune to the trailing history window
         counts = batch.groupBy(
             "hash", F.expr(f"start div {RATE_INTERVAL_NS}").alias("ivl")
         ).agg(F.count(F.lit(1)).alias("c"))
-        if os.path.exists(self.state_path):
-            counts = counts.unionByName(spark.read.parquet(self.state_path))
+        prior = [v for v in _state_versions(self.state_path) if v < batch_id]
+        if prior:
+            counts = counts.unionByName(
+                spark.read.parquet(_version_dir(self.state_path, prior[-1]))
+            )
         merged = counts.groupBy("hash", "ivl").agg(F.sum("c").alias("c"))
         max_ivl = merged.agg(F.max("ivl")).collect()[0][0]
         merged = merged.filter(F.col("ivl") > max_ivl - RATE_HISTORY).persist()
@@ -103,9 +111,10 @@ class AdaptiveTimeoutController:
             latest.filter(F.col("rn") == 1).agg(F.max("factor")).collect()[0][0] or 1.0
         )
 
-        merged.write.mode("overwrite").parquet(self.state_path + "_next")
+        merged.write.mode("overwrite").parquet(_version_dir(self.state_path, batch_id))
         merged.unpersist()
-        self._swap()
+        # keep the version this batch read, so a replay can re-read it
+        _prune_versions(self.state_path, keep_from=prior[-1] if prior else batch_id)
 
         # W3
         self.last_timebase_ns, self.last_factor = timebase_ns, float(max_factor)
@@ -113,13 +122,6 @@ class AdaptiveTimeoutController:
             min(TIMEOUT_MAX_NS, max(TIMEOUT_MIN_NS, timebase_ns * float(max_factor)))
         )
         return self.timeout_ns
-
-    def _swap(self) -> None:
-        import shutil
-
-        if os.path.exists(self.state_path):
-            shutil.rmtree(self.state_path)
-        os.rename(self.state_path + "_next", self.state_path)
 
 
 def adaptive_incremental_cluster_query(
@@ -137,8 +139,6 @@ def adaptive_incremental_cluster_query(
 
     Returns (DataStreamWriter, controller); the controller exposes the
     evolving timeout for inspection/telemetry."""
-    from .incremental import process_increment
-
     spark = events.sparkSession
     controller = AdaptiveTimeoutController(spark, state_path + "_rates")
 
@@ -154,7 +154,7 @@ def adaptive_incremental_cluster_query(
             gap_ns=gap_ns,
             watermark_ns=horizon_ns,
         )
-        controller.update(batch_df.select("hash", "start"))
+        controller.update(batch_df.select("hash", "start"), batch_id)
 
     writer = events.writeStream.foreachBatch(fb).option("checkpointLocation", checkpoint_dir)
     return writer, controller

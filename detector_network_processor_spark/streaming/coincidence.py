@@ -70,19 +70,11 @@ def _resolve_collected(criterion: str):
     return kernel
 
 
-#: rows-per-trigger bound above which the constant-key convenience path
-#: refuses to build (its session state serializes onto ONE state
-#: partition); callers declaring a higher expected rate must use
-#: ``stream_cluster_coincidences_scaled``.
-SESSION_PATH_MAX_ROWS_PER_TRIGGER = 1_000_000
-
-
 def stream_cluster_coincidences(
     events: DataFrame,
     criterion: str = "physics",
     gap_ns: int | None = None,
     watermark_ns: int = 10_000_000_000,
-    expected_rows_per_trigger: int | None = None,
 ) -> DataFrame:
     """events: streaming DataFrame with hash,start,end,time_acc,
     ublox_counter,fix,lat,lon,h (start/end int64 ns).
@@ -93,11 +85,10 @@ def stream_cluster_coincidences(
     relabeled domain here — callers never see the 1000× scaling.
 
     LOW-VOLUME convenience path: building this plan always emits a
-    ``UserWarning`` pointing to ``stream_cluster_coincidences_scaled``
-    (the sharded exact-equivalent), and REFUSES (``ValueError``) when
-    ``expected_rows_per_trigger`` exceeds
-    ``SESSION_PATH_MAX_ROWS_PER_TRIGGER`` — the constant session key
-    funnels all state updates through one state partition.
+    ``UserWarning`` pointing to
+    ``streaming.incremental.incremental_cluster_query`` (the sharded
+    exact-equivalent) — the constant session key funnels all state updates
+    through one state partition.
 
     Only that one partition ever holds a row, yet a query started with
     ``spark.sql.shuffle.partitions=N`` loads and commits N state stores
@@ -107,24 +98,12 @@ def stream_cluster_coincidences(
 
     Returns a streaming L1 DataFrame (append mode; sessions emit once the
     watermark passes their gap horizon)."""
-    if (
-        expected_rows_per_trigger is not None
-        and expected_rows_per_trigger > SESSION_PATH_MAX_ROWS_PER_TRIGGER
-    ):
-        raise ValueError(
-            f"stream_cluster_coincidences is the single-state-partition "
-            f"convenience path; declared rate {expected_rows_per_trigger} "
-            f"rows/trigger exceeds the bound "
-            f"{SESSION_PATH_MAX_ROWS_PER_TRIGGER}. Use "
-            f"stream_cluster_coincidences_scaled (sharded state, same "
-            f"exact semantics)."
-        )
     warnings.warn(
         "stream_cluster_coincidences serializes session state onto one "
         "state partition (constant grouping key; the stream command starts "
         "it with spark.sql.shuffle.partitions=1 so no other state store is "
         "committed per trigger) — fine at station-network rates; for "
-        "high-volume streams use stream_cluster_coincidences_scaled.",
+        "high-volume streams use streaming.incremental.incremental_cluster_query.",
         UserWarning,
         stacklevel=2,
     )
@@ -139,10 +118,10 @@ def stream_cluster_coincidences(
     # the key is a constant and session-state updates serialize onto one
     # state partition. This path is therefore the LOW-VOLUME convenience
     # API (mirrors the reference's single `muon::filter` thread). The scale
-    # path is ``stream_cluster_coincidences_scaled`` below
-    # (streaming/incremental.py): the distributed batch operator per
-    # micro-batch with a carried open tail — same exact semantics, state
-    # and compute sharded by the range shuffle. Exact sharding of THIS
+    # path is ``streaming.incremental.incremental_cluster_query``: the
+    # distributed batch operator per micro-batch with a carried open tail
+    # — same exact semantics, state and compute sharded by the range
+    # shuffle. Exact sharding of THIS
     # plan is not expressible in Structured Streaming: bucket keys split
     # boundary sessions, and every stitch mechanism is rejected by Spark —
     # session_window merges anchor on window-END event times (a chained
@@ -164,43 +143,4 @@ def stream_cluster_coincidences(
         )
         .select("hits")
         .mapInPandas(_resolve_collected(criterion), L1_SCHEMA)
-    )
-
-
-def stream_cluster_coincidences_scaled(
-    events: DataFrame,
-    out_path: str,
-    state_path: str,
-    checkpoint_dir: str,
-    criterion: str = "physics",
-    gap_ns: int | None = None,
-    watermark_ns: int = 10_000_000_000,
-):
-    """The SCALE variant of ``stream_cluster_coincidences`` — same inputs,
-    same exact semantics, but state and compute shard across the cluster.
-
-    Delegates to the incremental micro-batch engine
-    (streaming/incremental.py): each trigger runs the distributed BATCH
-    operator over new rows ∪ carried open tail, emits closed groups to
-    ``out_path/batch_id=N/`` and carries the open tail in range-sharded
-    parquet state. Use this whenever the stream is more than a single
-    executor's worth of events; the session_window path above keeps the
-    pure-DataFrame streaming shape but serializes session state onto one
-    partition (see the in-function comment for why that is a Structured
-    Streaming limit, not a choice).
-
-    Returns the (unstarted) ``DataStreamWriter``; call ``.trigger(...)``/
-    ``.start()``, then ``streaming.incremental.flush_incremental_state``
-    after end-of-stream to emit the final open tail.
-    """
-    from .incremental import incremental_cluster_query
-
-    return incremental_cluster_query(
-        events,
-        out_path,
-        state_path,
-        checkpoint_dir,
-        criterion=criterion,
-        gap_ns=gap_ns,
-        watermark_ns=watermark_ns,
     )

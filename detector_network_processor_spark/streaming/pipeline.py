@@ -28,7 +28,7 @@ ROCKSDB_PROVIDER = (
 )
 
 
-def use_rocksdb_state(spark: SparkSession, changelog_checkpointing: bool = True) -> None:
+def use_rocksdb_state(spark: SparkSession) -> None:
     """Switch stateful streaming to the RocksDB state store — the
     production backend at scale: state lives off-heap/on-disk per
     executor instead of in the JVM heap (the default HDFS-backed provider
@@ -38,10 +38,7 @@ def use_rocksdb_state(spark: SparkSession, changelog_checkpointing: bool = True)
     Applies to queries STARTED after this call (provider is fixed at
     query start and persisted in the checkpoint)."""
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true" if changelog_checkpointing else "false",
-    )
+    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
 
 
 def stream_main_path(

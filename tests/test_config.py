@@ -1,15 +1,22 @@
 """EngineConfig surface (reference src/configuration.cpp:30-58,
-config/config.h Default:: block) + the single python-stage-width knob."""
+config/config.h Default:: block) and the package's whole option surface."""
 
 from __future__ import annotations
 
+import ast
+import dataclasses
+import pathlib
+import re
+
 import pyspark.sql.functions as F
 
+import detector_network_processor_spark
 from detector_network_processor_spark.config import (
-    PY_STAGE_CONF_KEY,
     EngineConfig,
     python_stage_partitions,
 )
+
+PACKAGE_DIR = pathlib.Path(detector_network_processor_spark.__file__).parent
 
 
 def test_defaults_match_reference():
@@ -49,23 +56,76 @@ def test_from_file_parses_reference_format(tmp_path):
 
 def test_from_env_overrides(monkeypatch):
     monkeypatch.setenv("DNP_STATION_ID", "envstation")
-    monkeypatch.setenv("DNP_PYTHON_STAGE_PARTITIONS", "48")
+    monkeypatch.setenv("DNP_GEOHASH_LENGTH", "8")
     cfg = EngineConfig.from_env()
     assert cfg.station_id == "envstation"
-    assert cfg.python_stage_partitions == 48
+    assert cfg.geohash_length == 8
 
 
-def test_python_stage_partitions_resolution(spark):
-    base = spark.sparkContext.defaultParallelism
-    assert python_stage_partitions(spark) == base
-    spark.conf.set(PY_STAGE_CONF_KEY, "7")
-    try:
-        assert python_stage_partitions(spark) == 7
-        # explicit config wins over the session conf
-        assert python_stage_partitions(spark, EngineConfig(python_stage_partitions=3)) == 3
-    finally:
-        spark.conf.unset(PY_STAGE_CONF_KEY)
-    assert python_stage_partitions(spark) == base
+def test_python_stage_partitions_is_default_parallelism(spark):
+    assert python_stage_partitions(spark) == spark.sparkContext.defaultParallelism
+
+
+def _is_os_attr(node: ast.AST, attr: str) -> bool:
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr == attr
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "os"
+    )
+
+
+def _env_keys_read(tree: ast.AST) -> set[str]:
+    """String-literal keys of os.environ.get(...), os.environ[...] and
+    os.getenv(...) in one module."""
+    keys = set()
+    for node in ast.walk(tree):
+        key = None
+        if isinstance(node, ast.Call) and node.args:
+            f = node.func
+            if _is_os_attr(f, "getenv") or (
+                isinstance(f, ast.Attribute) and f.attr == "get" and _is_os_attr(f.value, "environ")
+            ):
+                key = node.args[0]
+        elif isinstance(node, ast.Subscript) and _is_os_attr(node.value, "environ"):
+            key = node.slice
+        if isinstance(key, ast.Constant) and isinstance(key.value, str):
+            keys.add(key.value)
+    return keys
+
+
+def test_option_surface_is_pinned():
+    """Every setting the package reads is listed here: a new environment
+    variable, engine conf key or config field needs an edit to this test."""
+    env_keys = set()
+    engine_confs = []
+    for path in sorted(PACKAGE_DIR.rglob("*.py")):
+        src = path.read_text(encoding="utf-8")
+        env_keys |= _env_keys_read(ast.parse(src, filename=str(path)))
+        engine_confs += [
+            f"{path.name}: {m}" for m in re.findall(r"spark\.(?:engine|dnp)\.[A-Za-z0-9_.]*", src)
+        ]
+    assert env_keys == {"SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY", "SPARK_GRAFT_SF_DIR"}
+    assert engine_confs == []
+    # the reference's config-file keys (configuration.cpp:30-58), with the
+    # interval keys' units in the field names; credentials are left out
+    assert {f.name for f in dataclasses.fields(EngineConfig)} == {
+        "station_id",
+        "source_mqtt_base_path",
+        "sink_mqtt_base_path",
+        "source_mqtt_host",
+        "source_mqtt_port",
+        "sink_mqtt_host",
+        "sink_mqtt_port",
+        "influx_host",
+        "influx_database",
+        "store_histogram",
+        "histogram",
+        "histogram_sample_time_h",
+        "geohash_length",
+        "clusterlog_interval_s",
+        "detectorsummary_interval_s",
+    }
 
 
 def test_interval_changes_detector_summary(spark):

@@ -377,20 +377,54 @@ def test_increment_write_failure_propagates(spark, monkeypatch):
     (guide §2.6 overlap); the futures must be JOINED with exceptions
     re-raised, so a failed pairs write or a failed index write can never
     let the increment return 'success' with half its directories missing
-    (the next batch would silently read an incomplete history)."""
+    (the next batch would silently read an incomplete history). Once the
+    fault is gone, re-running the failed batch id (what foreachBatch does
+    on restart) and one more batch must leave exactly the one-shot pairs
+    and each of the failed batch's documents once in the index — the
+    replay the "callers must replay, never skip" caveat in
+    streaming/overlap.py relies on."""
     import shutil
     import tempfile
 
     import pytest
 
+    from detector_network_processor_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures,
+    )
     from detector_network_processor_spark.streaming.dedup import process_neardup_increment
 
     import os
 
-    df = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta eta theta doc{i}") for i in range(8)],
-        "doc_id long, text string",
-    )
+    THRESH = 0.3
+    schema = "doc_id long, text string"
+
+    def docs(lo, hi):
+        return spark.createDataFrame(
+            [
+                (i, f"alpha beta gamma delta epsilon zeta eta theta doc{i}"
+                 if i % 3 else " ".join(f"w{i}_{j}" for j in range(9)))
+                for i in range(lo, hi)
+            ],
+            schema,
+        )
+
+    def assert_replayed(tmp, n_docs, failed_batch, failed_ids):
+        want = {
+            (min(r.doc_a, r.doc_b), max(r.doc_a, r.doc_b), r.est_jaccard)
+            for r in minhash_lsh_pairs(minhash_signatures(docs(0, n_docs))).collect()
+            if r.est_jaccard >= THRESH
+        }
+        got = {
+            (min(r.doc_a, r.doc_b), max(r.doc_a, r.doc_b), r.est_jaccard)
+            for r in spark.read.parquet(f"{tmp}/out").collect()
+        }
+        assert want and got == want
+        ids = [
+            r.doc_id
+            for r in spark.read.parquet(f"{tmp}/index/ingest_batch={failed_batch}").collect()
+        ]
+        assert sorted(ids) == list(failed_ids)
 
     # failed PAIRS write: the out root is a FILE, so creating
     # out/batch_id=0 under it fails while the index write succeeds
@@ -399,7 +433,11 @@ def test_increment_write_failure_propagates(spark, monkeypatch):
         with open(f"{tmp}/out", "w") as fh:
             fh.write("not a directory")
         with pytest.raises(Exception):
-            process_neardup_increment(spark, df, f"{tmp}/index", f"{tmp}/out", 0, threshold=0.3)
+            process_neardup_increment(spark, docs(0, 8), f"{tmp}/index", f"{tmp}/out", 0, threshold=THRESH)
+        os.remove(f"{tmp}/out")
+        process_neardup_increment(spark, docs(0, 8), f"{tmp}/index", f"{tmp}/out", 0, threshold=THRESH)
+        process_neardup_increment(spark, docs(8, 16), f"{tmp}/index", f"{tmp}/out", 1, threshold=THRESH)
+        assert_replayed(tmp, 16, 0, range(0, 8))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -414,7 +452,7 @@ def test_increment_write_failure_propagates(spark, monkeypatch):
     tmp = tempfile.mkdtemp(prefix="dnp_wfail_")
     real_parquet = DataFrameWriter.parquet
     try:
-        process_neardup_increment(spark, df, f"{tmp}/index", f"{tmp}/out", 0, threshold=0.3)
+        process_neardup_increment(spark, docs(0, 8), f"{tmp}/index", f"{tmp}/out", 0, threshold=THRESH)
 
         def failing_parquet(self, path, *a, **kw):
             if "ingest_batch=1" in path:
@@ -426,8 +464,12 @@ def test_increment_write_failure_propagates(spark, monkeypatch):
         # advice)
         monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
         with pytest.raises(Exception, match="injected index-write failure"):
-            process_neardup_increment(spark, df, f"{tmp}/index", f"{tmp}/out", 1, threshold=0.3)
+            process_neardup_increment(spark, docs(8, 16), f"{tmp}/index", f"{tmp}/out", 1, threshold=THRESH)
         # the failed increment must not have destroyed batch 0's history
         assert os.path.isdir(f"{tmp}/index/ingest_batch=0")
+        monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+        process_neardup_increment(spark, docs(8, 16), f"{tmp}/index", f"{tmp}/out", 1, threshold=THRESH)
+        process_neardup_increment(spark, docs(16, 24), f"{tmp}/index", f"{tmp}/out", 2, threshold=THRESH)
+        assert_replayed(tmp, 24, 1, range(8, 16))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
