@@ -32,8 +32,11 @@ import sys
 _CPUS_HELP = "local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())"
 
 
-# Spark holds a processing-time interval in microseconds, in a signed 64-bit long
-_MAX_TRIGGER_MS = (2**63 - 1) // 1000
+# Spark holds an interval in microseconds, in a signed 64-bit long
+_MAX_INTERVAL_US = 2**63 - 1
+_MAX_TRIGGER_MS = _MAX_INTERVAL_US // 1000
+# the monitoring path's rate sub-interval; a summary window holds at least one
+_SUB_INTERVAL_NS = 30 * 10**9
 
 
 def _trigger_ms(seconds: float) -> int:
@@ -51,6 +54,21 @@ def _trigger_seconds(text: str) -> float:
             f"and at most {_MAX_TRIGGER_MS} ms (Spark's interval limit)"
         )
     return seconds
+
+
+def _whole_ns(what: str, least: int):
+    """argparse type: whole ns from ``least`` up to Spark's interval limit
+    (the stream relabels ns as us, so the limit caps a watermark delay)."""
+
+    def ns(text: str) -> int:
+        value = int(text)
+        if not least <= value <= _MAX_INTERVAL_US:
+            raise argparse.ArgumentTypeError(
+                f"{text!r}: {what} is a whole number of ns from {least} to {_MAX_INTERVAL_US}"
+            )
+        return value
+
+    return ns
 
 
 def _add_trigger_seconds(parser: argparse.ArgumentParser) -> None:
@@ -99,7 +117,9 @@ def _build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--out", required=True, help="output parquet dir for flattened L1 groups")
     sp.add_argument("--checkpoint", required=True)
     sp.add_argument("--criterion", choices=("physics", "simple"), default="physics")
-    sp.add_argument("--watermark-ns", type=int, default=10_000_000_000)
+    sp.add_argument(
+        "--watermark-ns", type=_whole_ns("the watermark delay", 0), default=10_000_000_000
+    )
     _add_trigger_seconds(sp)
     sp.add_argument("--available-now", action="store_true", help="drain the spool and exit")
     sp.add_argument("--cpus", default=None, help=_CPUS_HELP)
@@ -116,7 +136,11 @@ def _build_parser() -> argparse.ArgumentParser:
     mon.add_argument("--out", required=True, help="output parquet dir for formatted lines/points")
     mon.add_argument("--checkpoint", required=True)
     mon.add_argument("--output", choices=("text", "influx", "summary"), default="text")
-    mon.add_argument("--interval-ns", type=int, default=120 * 10**9)
+    mon.add_argument(
+        "--interval-ns",
+        type=_whole_ns("the summary interval (at least the 30 s sub-interval)", _SUB_INTERVAL_NS),
+        default=120 * 10**9,
+    )
     mon.add_argument("--available-now", action="store_true", help="drain the spool and exit")
     mon.add_argument("--cpus", default=None, help=_CPUS_HELP)
 

@@ -25,8 +25,6 @@ Criteria: "physics" (C3, WGS84 distance / time-of-flight scoring) or
 
 from __future__ import annotations
 
-import math
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -40,7 +38,14 @@ from pyspark.sql.types import (
 
 from ..constants import MAX_TIME_NS, MEAN_FALSE_THRESHOLD, SIMPLE_WINDOW_NS
 from ..config import python_stage_partitions
-from .golden import Hit, cluster_hits, compare_physics, compare_simple, groups_to_rows
+from .golden import (
+    Hit,
+    cluster_hits,
+    compare_physics,
+    compare_simple,
+    groups_to_rows,
+    resolve_criterion,
+)
 from .sessionize import sessionize_global_gap
 
 CONSTITUENT_SCHEMA = StructType(
@@ -281,10 +286,11 @@ def _resolve_small_jvm(small: DataFrame, criterion: str) -> DataFrame:
     stage_ecef = ["session_id", "e1", "e2", "e3", "e4"] + [
         f"{ecef(f'e{i + 1}', ax)} AS {ax}{i + 1}" for i in range(4) for ax in "xyz"
     ]
+    compare, _ = resolve_criterion(criterion)
 
     def score(i: int, j: int) -> str:
         dt = f"CAST(e{j}.start - e{i}.start AS DOUBLE)"
-        if criterion == "physics":
+        if compare is compare_physics:
             dist = (
                 f"sqrt(power(x{i} - x{j}, 2) + power(y{i} - y{j}, 2) + power(z{i} - z{j}, 2))"
             )
@@ -455,7 +461,6 @@ def cluster_coincidences(
     events: DataFrame,
     stations: DataFrame | None = None,
     criterion: str = "physics",
-    gap_ns: int | None = None,
 ) -> DataFrame:
     """events: columns hash,start,end,time_acc,ublox_counter,fix(+lat,lon,h).
 
@@ -464,9 +469,7 @@ def cluster_coincidences(
     relative to the fact stream). Returns the L1 table (L1_SCHEMA),
     singletons included (filter ``n >= 2`` for the K1/K2 sink semantics).
     """
-    if gap_ns is None:
-        gap_ns = int(math.ceil(MAX_TIME_NS)) if criterion == "physics" else SIMPLE_WINDOW_NS
-    compare = compare_physics if criterion == "physics" else compare_simple
+    compare, gap = resolve_criterion(criterion)
 
     if stations is not None:
         events = events.join(
@@ -487,7 +490,7 @@ def cluster_coincidences(
     # sessionize emits session sizes in the same pass — the singleton fast
     # path below is shuffle-free (sizes via a window would re-shuffle the
     # whole stream on session_id just to count).
-    sess = sessionize_global_gap(ev, "start", gap_ns).withColumnRenamed("session_n", "_n")
+    sess = sessionize_global_gap(ev, "start", gap).withColumnRenamed("session_n", "_n")
 
     singles = sess.filter(F.col("_n") == 1).select(
         F.col("session_id"),

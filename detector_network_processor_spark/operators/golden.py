@@ -119,6 +119,22 @@ def compare_simple(a: Hit, b: Hit) -> float:
     return 1.0 if abs(a.start - b.start) <= SIMPLE_WINDOW_NS else -1.0
 
 
+# criterion name -> (compare function, session gap ns). The gap is the
+# criterion's hard time cutoff, so a larger gap never splits a coincidence.
+_CRITERIA = {
+    "physics": (compare_physics, math.ceil(MAX_TIME_NS)),
+    "simple": (compare_simple, SIMPLE_WINDOW_NS),
+}
+
+
+def resolve_criterion(name: str):
+    """(compare function, session gap ns) of a criterion name; any other
+    name raises ``ValueError``."""
+    if name not in _CRITERIA:
+        raise ValueError(f"unknown criterion {name!r}; expected one of {sorted(_CRITERIA)}")
+    return _CRITERIA[name]
+
+
 def apply_criterion(event_hits: list, group_hits: list, compare) -> tuple[int, int]:
     """criterion::apply — returns (verdict, true_e)."""
     if len(event_hits) < 2 and len(group_hits) < 2:

@@ -1,20 +1,19 @@
-"""Adaptive timebase / slowdown factor (SURVEY.md §2.7 W1-W3) as batch
-calibration plans.
+"""Adaptive timebase / slowdown factor (SURVEY.md §2.7 W1-W3): the one
+home of the three formulas, used by the batch calibration plans and by the
+incremental clusterer's live horizon (streaming/incremental.py).
 
 The reference's feedback loop (event-time span sampled every 2 s ->
 timebase; per-station rate dip -> factor; product clamped to [2 s, 30 min]
-group timeout) has no Spark-native streaming form (SURVEY.md §4.2 item 2);
-the engine runs it as a calibration query over history — the values it
-produces configure the streaming job's session gap/watermark. Batch
-canonical: the 2 s processing-time sampling becomes tumbling 2 s event-time
-buckets.
+group timeout) runs here as Spark expressions; the 2 s processing-time
+sampling becomes tumbling 2 s event-time buckets.
 
 - W1 (src/supervision/timebase.cpp:17-45): per 2 s bucket, observed span =
   max(start)-min(start), clamped to [800 ms, 2 min].
-- W2 (src/analysis/detectorstation.cpp:127-135): per station per rate
+- W2 (src/analysis/detectorstation.cpp:127-135): per station per 30 s rate
   interval, factor = ((mean - cur)/sigma + 1)*2 when cur < mean - sigma
-  else 1; cluster factor = max over reliable stations — here over all
-  stations with enough history (reliability labeling composes upstream).
+  over the trailing 10 intervals, else 1; cluster factor = max over
+  reliable stations — here over all stations with enough history
+  (reliability labeling composes upstream).
 - W3 (src/messages/event.cpp:7-11): timeout = clamp(base*factor, 2 s, 30 min).
 """
 
@@ -29,14 +28,17 @@ TIMEBASE_MIN_NS = 800_000_000  # 800 ms
 TIMEBASE_MAX_NS = 120 * NS  # 2 min
 TIMEOUT_MIN_NS = 2 * NS
 TIMEOUT_MAX_NS = 30 * 60 * NS
+RATE_INTERVAL_NS = 30 * NS
+RATE_HISTORY = 10
 
 
-def timebase_calibration(events: DataFrame, ts_col: str = "start") -> DataFrame:
-    """W1: per 2 s sample bucket, the clamped observed event-time span."""
-    b = events.withColumn("bucket", F.expr(f"{ts_col} div {TIMEBASE_SAMPLE_NS}"))
+def timebase_calibration(events: DataFrame) -> DataFrame:
+    """W1: per 2 s sample bucket of ``start``, the clamped observed
+    event-time span."""
+    b = events.withColumn("bucket", F.expr(f"start div {TIMEBASE_SAMPLE_NS}"))
     return (
         b.groupBy("bucket")
-        .agg((F.max(ts_col) - F.min(ts_col)).alias("span_ns"), F.count(F.lit(1)).alias("n_events"))
+        .agg((F.max("start") - F.min("start")).alias("span_ns"), F.count(F.lit(1)).alias("n_events"))
         .withColumn(
             "timebase_ns",
             F.greatest(F.lit(TIMEBASE_MIN_NS), F.least(F.lit(TIMEBASE_MAX_NS), F.col("span_ns"))),
@@ -44,13 +46,17 @@ def timebase_calibration(events: DataFrame, ts_col: str = "start") -> DataFrame:
     )
 
 
-def rate_factor(events: DataFrame, ts_col: str = "start", hash_col: str = "hash",
-                interval_ns: int = 30 * NS, history: int = 10) -> DataFrame:
-    """W2: per station per interval, the slowdown factor from the rate dip
-    test cur < mean - sigma over the trailing ``history`` intervals."""
-    b = events.withColumn("ivl", F.expr(f"{ts_col} div {interval_ns}"))
-    counts = b.groupBy(hash_col, "ivl").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy(hash_col).orderBy("ivl").rowsBetween(-history + 1, 0)
+def interval_counts(events: DataFrame) -> DataFrame:
+    """W2 input: events per station (``hash``) per rate interval ``ivl``,
+    as column ``c``."""
+    b = events.withColumn("ivl", F.expr(f"start div {RATE_INTERVAL_NS}"))
+    return b.groupBy("hash", "ivl").agg(F.count(F.lit(1)).alias("c"))
+
+
+def dip_factor() -> tuple[F.Column, F.Column, F.Column]:
+    """W2: (mean, sigma, factor) of the rate dip test cur < mean - sigma
+    over each station's trailing ``RATE_HISTORY`` intervals of ``c``."""
+    w = Window.partitionBy("hash").orderBy("ivl").rowsBetween(-RATE_HISTORY + 1, 0)
     mean = F.avg("c").over(w)
     # population stddev over the trailing window (matches the rate ring)
     sigma = F.sqrt(F.avg(F.col("c") * F.col("c")).over(w) - mean * mean)
@@ -58,8 +64,14 @@ def rate_factor(events: DataFrame, ts_col: str = "start", hash_col: str = "hash"
     factor = F.when(
         (sigma > 0) & (cur < (mean - sigma)), ((mean - cur) / sigma + 1.0) * 2.0
     ).otherwise(F.lit(1.0))
-    return counts.select(
-        hash_col,
+    return mean, sigma, factor
+
+
+def rate_factor(events: DataFrame) -> DataFrame:
+    """W2: per station per interval, the slowdown factor (rounded)."""
+    mean, sigma, factor = dip_factor()
+    return interval_counts(events).select(
+        "hash",
         "ivl",
         F.col("c").alias("n_events"),
         F.round(mean, 6).alias("mean_rate"),

@@ -23,10 +23,14 @@ from pyspark.sql.window import Window
 
 from ..io import load_table, table_row_count, ts_to_us
 from ..operators.coincidence import cluster_coincidences, l1_flatten
+from ..operators.golden import resolve_criterion
 from ..session import eager_ckpt_tracked as _eager_ckpt_tracked
 from ..session import release_ckpts as _release_ckpts
 from . import register
 from .lifecycle_oracle import station_lifecycle_oracle_sql as _lifecycle_oracle_sql
+
+# the physics criterion's session gap (its hard time cutoff)
+_PHYSICS_CUTOFF_NS = resolve_criterion("physics")[1]
 
 _NS_PER_EVENT = 400_000  # mean gap ~2x the physics cutoff -> bounded sessions
 
@@ -267,7 +271,13 @@ ORDER BY spans.ivl
     doc="W1+W2+W3 composition (reference src/supervision/station.cpp:65-82, src/messages/event.cpp:7-11): cluster-wide max factor x timebase, clamped to [2 s, 30 min] group timeout.",
 )
 def adaptive_timeout_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.timebase import TIMEBASE_MAX_NS, TIMEBASE_MIN_NS, group_timeout, rate_factor
+    from ..operators.timebase import (
+        RATE_INTERVAL_NS,
+        TIMEBASE_MAX_NS,
+        TIMEBASE_MIN_NS,
+        group_timeout,
+        rate_factor,
+    )
 
     ev = _station_events_us(spark, sf_dir).select("hash", (F.col("start") * 1000).alias("start"))
     factors = (
@@ -276,7 +286,7 @@ def adaptive_timeout_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.max("factor"), 6).alias("max_factor"))
     )
     spans = (
-        ev.withColumn("ivl", F.expr("start div 30000000000"))
+        ev.withColumn("ivl", F.expr(f"start div {RATE_INTERVAL_NS}"))
         .groupBy("ivl")
         .agg(
             F.greatest(
@@ -609,14 +619,6 @@ hits AS (
 )"""
 
 
-def _session_gap_ns() -> int:
-    import math
-
-    from ..constants import MAX_TIME_NS
-
-    return int(math.ceil(MAX_TIME_NS))
-
-
 _MEMBER_T = (
     "STRUCT(hash BIGINT, start BIGINT, e_end BIGINT, time_acc BIGINT, "
     "x DOUBLE, y DOUBLE, z DOUBLE)"
@@ -702,7 +704,7 @@ geo AS (
   FROM hits {gate}
 ),
 l1brk AS (
-  SELECT *, CASE WHEN start - lag(start) OVER (ORDER BY start, hash) > {_session_gap_ns()}
+  SELECT *, CASE WHEN start - lag(start) OVER (ORDER BY start, hash) > {_PHYSICS_CUTOFF_NS}
                  THEN 1 ELSE 0 END AS b
   FROM geo
 ),
@@ -779,7 +781,7 @@ FROM (
     oracle=f"""
 WITH {_muonize_hits_sql()},
 brk AS (
-  SELECT start, CASE WHEN start - lag(start) OVER (ORDER BY start) > {_session_gap_ns()}
+  SELECT start, CASE WHEN start - lag(start) OVER (ORDER BY start) > {_PHYSICS_CUTOFF_NS}
                 THEN 1 ELSE 0 END AS b
   FROM hits
 ),
@@ -799,7 +801,7 @@ def l1_candidate_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sessionize import sessionize_global_gap
 
     hits = muonize_events(spark, sf_dir)
-    sess = sessionize_global_gap(hits, "start", _session_gap_ns())
+    sess = sessionize_global_gap(hits, "start", _PHYSICS_CUTOFF_NS)
     return (
         sess.groupBy("session_id")
         .agg(

@@ -26,22 +26,19 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..constants import MAX_TIME_NS, SIMPLE_WINDOW_NS
-from ..operators.coincidence import L1_SCHEMA, _session_rows_to_l1
-from ..operators.golden import Hit, compare_physics, compare_simple
-
-import math
 import warnings
+
+from ..operators.coincidence import L1_SCHEMA, _session_rows_to_l1
+from ..operators.golden import Hit, resolve_criterion
 
 _L1_COLS = [f.name for f in L1_SCHEMA.fields]
 
 
-def _resolve_collected(criterion: str):
+def _resolve_collected(compare):
     """mapInPandas kernel over (hits array<struct>) session rows: the same
     exact replay core the batch operator and the golden model share
     (``_session_rows_to_l1``), invoked once per Arrow batch instead of once
     per row — replaces the former row-at-a-time ``F.udf`` resolver."""
-    compare = compare_physics if criterion == "physics" else compare_simple
 
     def kernel(iterator):
         import pandas as pd
@@ -73,7 +70,6 @@ def _resolve_collected(criterion: str):
 def stream_cluster_coincidences(
     events: DataFrame,
     criterion: str = "physics",
-    gap_ns: int | None = None,
     watermark_ns: int = 10_000_000_000,
 ) -> DataFrame:
     """events: streaming DataFrame with hash,start,end,time_acc,
@@ -98,6 +94,7 @@ def stream_cluster_coincidences(
 
     Returns a streaming L1 DataFrame (append mode; sessions emit once the
     watermark passes their gap horizon)."""
+    compare, gap = resolve_criterion(criterion)
     warnings.warn(
         "stream_cluster_coincidences serializes session state onto one "
         "state partition (constant grouping key; the stream command starts "
@@ -107,21 +104,14 @@ def stream_cluster_coincidences(
         UserWarning,
         stacklevel=2,
     )
-    if gap_ns is None:
-        gap_ns = int(math.ceil(MAX_TIME_NS)) if criterion == "physics" else SIMPLE_WINDOW_NS
 
     ts = F.timestamp_micros(F.col("start"))  # ns relabeled as us — exact ints
     # 1 real ns == 1 relabeled us: express the ns delay as that many us.
     with_ts = events.withColumn("_ts", ts).withWatermark("_ts", f"{int(watermark_ns)} microseconds")
-    # session_window needs a companion grouping key in streaming; the
-    # coincidence buffer is one logical stream (cross-station sessions), so
-    # the key is a constant and session-state updates serialize onto one
-    # state partition. This path is therefore the LOW-VOLUME convenience
-    # API (mirrors the reference's single `muon::filter` thread). The scale
-    # path is ``streaming.incremental.incremental_cluster_query``: the
-    # distributed batch operator per micro-batch with a carried open tail
-    # — same exact semantics, state and compute sharded by the range
-    # shuffle. Exact sharding of THIS
+    # session_window needs a companion grouping key in streaming; for the
+    # one cross-station coincidence buffer it is a constant, so this is the
+    # LOW-VOLUME path (like the reference's single `muon::filter` thread;
+    # the scale path is streaming/incremental.py). Exact sharding of THIS
     # plan is not expressible in Structured Streaming: bucket keys split
     # boundary sessions, and every stitch mechanism is rejected by Spark —
     # session_window merges anchor on window-END event times (a chained
@@ -135,12 +125,12 @@ def stream_cluster_coincidences(
     # sessions) per trigger.
     return (
         with_ts.withColumn("_k", F.lit(0))
-        .groupBy("_k", F.session_window("_ts", f"{gap_ns + 1} microseconds"))
+        .groupBy("_k", F.session_window("_ts", f"{gap + 1} microseconds"))
         .agg(
             F.collect_list(
                 F.struct("hash", "start", "end", "time_acc", "ublox_counter", "fix", "lat", "lon", "h")
             ).alias("hits")
         )
         .select("hits")
-        .mapInPandas(_resolve_collected(criterion), L1_SCHEMA)
+        .mapInPandas(_resolve_collected(compare), L1_SCHEMA)
     )

@@ -1,69 +1,70 @@
 """Incremental micro-batch coincidence clustering — the SCALE path for the
 §2.5 operator in streaming mode.
 
-Why not ``session_window``: a streaming session window needs a companion
-grouping key, and the coincidence buffer is one logical cross-station
-stream, so that key is a constant — every session-state update then
-serializes through ONE state-store partition (the scale killer the
-round-1 review flagged at streaming/coincidence.py). Chaining a sharded
-per-time-cell session stage into a stitching stage does not work either:
-Spark supports neither a second ``withWatermark`` feeding a downstream
-stateful operator (min-policy watermark deadlock) nor a global session
-aggregation, and session intervals cannot extend backward from the
-watermarked column, which exact boundary stitching would need.
+Why not ``session_window``: its companion grouping key is a constant for
+the one cross-station coincidence buffer, so every session-state update
+serializes through ONE state-store partition; Spark offers no exact
+sharded alternative (no second ``withWatermark`` feeding a stateful
+operator, no global session aggregation, no backward-extending sessions).
 
-The Spark-first resolution is *incremental batch*: ``foreachBatch`` runs
-the already-distributed BATCH operator (range-shuffle sessionization with
-O(#partitions) boundary union-find + Arrow replay kernel,
-operators/coincidence.py) over ``new micro-batch rows ∪ carried open
-tail``, emits every group that can no longer grow, and carries forward
-only the open tail — the rows of sessions still within
-``gap + watermark`` of the newest event. Per batch:
+Instead ``foreachBatch`` runs the distributed BATCH operator
+(operators/coincidence.py) over ``new rows ∪ carried open tail``, emits
+every group that can no longer grow, and carries only the rows of
+sessions still within ``gap + horizon`` of the newest event. Heavy work
+is the batch plan; the driver collects two one-row results (the open-tail
+bookkeeping and the next horizon); state is parquet written by the range
+shuffle's own partitioning.
 
-- heavy work (sessionize + kernel) is fully distributed — the same plan
-  the batch engine runs, over (batch + tail) rows;
-- driver work is two scalar aggregates (horizon, open threshold);
-- carried state is a parquet dataset written by the shuffle's own
-  partitioning — sharded storage, no single-partition state store.
-
-Late-data semantics match the REFERENCE more closely than the
-session-window path: an event arriving later than the watermark horizon
-does not get dropped — it opens a fresh group (exactly
-src/analysis/coincidencefilter.cpp:103-109 / SURVEY §2.7 W4), it just can
-no longer join an already-emitted group.
+The horizon is the reference's adaptive group timeout, fed back as
+timebase_t flows into coincidence_filter::get
+(src/supervision/timebase.cpp:17-45, src/analysis/coincidencefilter.cpp:
+28-33), with W1-W3 from operators/timebase.py: W1 is the clamped span of
+the increment's newest 2 s bucket; W2 the max dip factor over each
+station's newest 30 s interval, from a carried per-station rate table;
+W3 ``clamp(W1 x W2, 2 s, 30 min)`` is the horizon the NEXT increment
+reads. Batch 0 uses 2 s; an increment with no rows leaves it unchanged.
+A rate dip keeps open groups around longer — the grow-only group timeout
+applied per increment instead of per group (SURVEY.md §7.3). An event
+later than the horizon is not dropped: it opens a fresh group, as in
+src/analysis/coincidencefilter.cpp:103-109 (SURVEY §2.7 W4).
 
 Replay safety (exactly-once output without a transactional table format):
-both writes are keyed by the foreachBatch ``batch_id``, which Spark
+every write is keyed by the foreachBatch ``batch_id``, which Spark
 redelivers UNCHANGED when a crashed batch re-runs —
 
-- output goes to ``out_path/batch_id=N/`` with mode=overwrite (the
-  standard idempotent-foreachBatch pattern; readers see one partition
-  directory per batch and ``spark.read.parquet(out_path)`` surfaces
-  ``batch_id`` as a discovered partition column);
+- output goes to ``out_path/batch_id=N/`` with mode=overwrite
+  (``spark.read.parquet(out_path)`` surfaces ``batch_id`` as a column);
 - state is VERSIONED: batch N reads the newest ``state_path/vM`` with
-  M < N and overwrites ``state_path/vN``; versions older than N-1 are
-  pruned only after vN lands. A replay of batch N therefore re-reads
-  exactly the pre-N state and overwrites (not duplicates) both its
-  output directory and its state version.
-
-A production deployment on a transactional format gets the same guarantee
-in one commit; this layout reproduces it with directory-granularity
-atomicity (parquet dir overwrite + post-write prune).
+  M < N — the open tail and, in its ``_horizon_ns`` file, the horizon —
+  and overwrites ``state_path/vN`` with the next ones; the rate table is
+  versioned the same way under ``state_path/rates/``. Versions older than
+  the one read are pruned only after the new one lands. A replay of batch
+  N, in the same query or after a restart, therefore re-reads exactly the
+  pre-N tail, horizon and rates, and overwrites its output and versions.
 """
 
 from __future__ import annotations
 
-import math
 import os
+import shutil
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..constants import MAX_TIME_NS, SIMPLE_WINDOW_NS
 from ..operators.coincidence import cluster_coincidences
+from ..operators.golden import resolve_criterion
+from ..operators.timebase import (
+    RATE_HISTORY,
+    TIMEOUT_MIN_NS,
+    dip_factor,
+    group_timeout,
+    interval_counts,
+    timebase_calibration,
+)
 from .overlap import run_overlapped
 
 HIT_COLS = ["hash", "start", "end", "time_acc", "ublox_counter", "fix", "lat", "lon", "h"]
+_HORIZON_FILE = "_horizon_ns"  # "_" prefix: parquet readers skip it
 
 
 def _last_start(col: str = "events") -> F.Column:
@@ -86,6 +87,55 @@ def _version_dir(state_path: str, version: int) -> str:
     return os.path.join(state_path, f"v{version:012d}")
 
 
+def _read_version(state_path: str, batch_id: int) -> int | None:
+    """The newest version below ``batch_id``: the one batch ``batch_id``
+    reads, and a replay of it re-reads."""
+    older = [v for v in _state_versions(state_path) if v < batch_id]
+    return older[-1] if older else None
+
+
+def _prune_versions(state_path: str, batch_id: int) -> None:
+    """Drop the versions older than the one batch ``batch_id`` read (that
+    one must survive so a replay of the batch can still read it)."""
+    older = [v for v in _state_versions(state_path) if v < batch_id]
+    for v in older[:-1]:
+        shutil.rmtree(_version_dir(state_path, v), ignore_errors=True)
+
+
+def _next_horizon(spark: SparkSession, batch: DataFrame, rates_path: str, batch_id: int):
+    """W1-W3 over this increment's rows and the rate table version it
+    follows. Returns (the horizon the next increment reads, the rate table
+    to write as version ``batch_id``, persisted), or None when the
+    increment has no rows."""
+    counts = interval_counts(batch)
+    read = _read_version(rates_path, batch_id)
+    if read is not None:
+        counts = counts.unionByName(spark.read.parquet(_version_dir(rates_path, read)))
+    merged = counts.groupBy("hash", "ivl").agg(F.sum("c").alias("c"))
+    # keep the trailing history window of the newest interval
+    newest = merged.agg(F.max("ivl").alias("_newest"))
+    rates = (
+        merged.crossJoin(F.broadcast(newest))
+        .filter(F.col("ivl") > F.col("_newest") - RATE_HISTORY)
+        .drop("_newest")
+        .persist()
+    )
+    # cluster-wide factor = max over the stations' newest interval
+    # (src/supervision/station.cpp:66-82 takes the max over its station map)
+    w2 = (
+        rates.withColumn("factor", dip_factor()[2])
+        .withColumn("rn", F.row_number().over(Window.partitionBy("hash").orderBy(F.desc("ivl"))))
+        .filter(F.col("rn") == 1)
+        .agg(F.max("factor").alias("factor"))
+    )
+    w1 = timebase_calibration(batch).orderBy(F.desc("bucket")).limit(1)
+    row = w1.crossJoin(w2).select(group_timeout(F.col("timebase_ns"), F.col("factor"))).collect()
+    if not row:
+        rates.unpersist()
+        return None
+    return row[0][0], rates
+
+
 def process_increment(
     spark: SparkSession,
     batch: DataFrame,
@@ -93,24 +143,25 @@ def process_increment(
     out_path: str,
     batch_id: int,
     criterion: str = "physics",
-    gap_ns: int | None = None,
-    watermark_ns: int = 10_000_000_000,
     final: bool = False,
 ) -> None:
     """Cluster one increment: (batch rows ∪ newest state version older
     than ``batch_id``) → overwrite ``out_path/batch_id=N`` with the closed
-    groups and ``state_path/vN`` with the open tail. Idempotent under
-    foreachBatch replay (same ``batch_id`` → same input state → same two
-    overwrites). ``final=True`` flushes everything (end of stream)."""
-    if gap_ns is None:
-        gap_ns = int(math.ceil(MAX_TIME_NS)) if criterion == "physics" else SIMPLE_WINDOW_NS
+    groups and ``state_path/vN`` with the open tail and the next horizon.
+    Idempotent under foreachBatch replay (same ``batch_id`` → same input
+    state → same overwrites). ``final=True`` flushes everything (end of
+    stream) and drops the state."""
+    _, gap = resolve_criterion(criterion)
 
-    prior = [v for v in _state_versions(state_path) if v < batch_id]
+    read = _read_version(state_path, batch_id)
     hits = batch.select(*HIT_COLS)
-    if prior:
-        hits = hits.unionByName(
-            spark.read.parquet(_version_dir(state_path, prior[-1])).select(*HIT_COLS)
-        )
+    if read is None:
+        horizon_ns = TIMEOUT_MIN_NS
+    else:
+        version = _version_dir(state_path, read)
+        hits = hits.unionByName(spark.read.parquet(version).select(*HIT_COLS))
+        with open(os.path.join(version, _HORIZON_FILE)) as f:
+            horizon_ns = int(f.read())
     hits = hits.persist()
     l1 = cluster_coincidences(hits, stations=None, criterion=criterion).withColumn(
         "_last", _last_start()
@@ -125,16 +176,10 @@ def process_increment(
         closed, open_rows = l1, None
     else:
         # Sessions are disjoint start-time intervals, so "still growable"
-        # is a pure threshold on the latest constituent start. ONE driver
-        # action per batch covers all three bookkeeping scalars (the r8
-        # verdict counted ~2 extra jobs per replayed micro-batch for the
-        # previous separate horizon + threshold collects, plus a per-batch
-        # isEmpty probe): group count (empty-batch no-op guard), growth
-        # horizon, and the open-tail start threshold. The threshold is
-        # conditional on the horizon — itself an aggregate — so the 1-row
-        # max(_last) aggregate is broadcast back under the conditional
-        # min; building that broadcast doubles as the job that
-        # materializes l1's cache.
+        # is a threshold on the latest constituent start. ONE driver action
+        # gives the group count (no-op guard), the newest start and the
+        # open-tail threshold; the 1-row max(_last) is broadcast back under
+        # the conditional min, and that job also materializes l1's cache.
         mx = l1.agg(F.max("_last").alias("_mx"))
         stats = (
             l1.crossJoin(F.broadcast(mx))
@@ -143,8 +188,8 @@ def process_increment(
                 F.first("_mx").alias("mx"),
                 F.min(
                     F.when(
-                        F.col("_last") + F.lit(gap_ns)
-                        >= F.col("_mx") - F.lit(watermark_ns),
+                        F.col("_last") + F.lit(gap)
+                        >= F.col("_mx") - F.lit(horizon_ns),
                         F.col("start"),
                     )
                 ).alias("thr"),
@@ -156,8 +201,7 @@ def process_increment(
             l1.unpersist()
             hits.unpersist()
             return
-        horizon = stats["mx"] - watermark_ns
-        closed = l1.filter(F.col("_last") + gap_ns < horizon)
+        closed = l1.filter(F.col("_last") + gap < stats["mx"] - horizon_ns)
         open_rows = (
             hits.filter(F.col("start") >= stats["thr"])
             if stats["thr"] is not None
@@ -170,50 +214,42 @@ def process_increment(
         )
 
     if open_rows is not None:
+        rates_path = os.path.join(state_path, "rates")
+        step = _next_horizon(spark, batch.select("hash", "start"), rates_path, batch_id)
+        next_horizon_ns = horizon_ns if step is None else step[0]
         # range-shard the carried state by time so the next increment's
-        # scan parallelizes even when the open tail is large (one file per
-        # non-empty range; a small tail compacting to one file is correct).
-        # Write the version even when empty: the lineage stays continuous,
-        # so a replay of batch N+1 always finds vN.
+        # scan parallelizes. Write the version even when empty, so a
+        # replay of batch N+1 always finds vN and its horizon.
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
         def _write_state() -> None:
+            version = _version_dir(state_path, batch_id)
             open_rows.repartitionByRange(n_parts, F.col("start")).write.mode(
                 "overwrite"
-            ).parquet(_version_dir(state_path, batch_id))
+            ).parquet(version)
+            with open(os.path.join(version, _HORIZON_FILE), "w") as f:
+                f.write(str(next_horizon_ns))
 
-        # The two terminal writes are INDEPENDENT jobs (closed reads the
-        # persisted l1, the state version reads the persisted hits), so they
-        # run overlapped (guide §2.6; same pattern as the near-dup increment,
-        # r12 A/B -12.5%): the short state write back-fills executor slots
-        # freed by the closed write's straggler tail. run_overlapped joins
-        # both futures fail-fast (sibling job groups cancelled on the first
-        # failure) and re-raises, so a replay of this batch_id re-overwrites
-        # BOTH directories — skip-instead-of-replay would orphan whichever
-        # directory committed (contract note in streaming/overlap.py).
-        # Pruning stays strictly AFTER the state write landed.
-        run_overlapped(spark, {"closed": _write_closed, "state": _write_state})
-        # keep the version this batch READ (not blindly batch_id-1: empty
-        # batches write no version, so the read one may be older) — a
-        # replay of this batch_id must be able to re-read it.
-        _prune_versions(state_path, keep_from=prior[-1] if prior else batch_id)
-    else:  # final flush — the stream is over, drop all state
-        import shutil
-
+        jobs = {"closed": _write_closed, "state": _write_state}
+        if step is not None:
+            jobs["rates"] = lambda: step[1].write.mode("overwrite").parquet(
+                _version_dir(rates_path, batch_id)
+            )
+        # The terminal writes read separate caches, so they run overlapped
+        # (guide §2.6, as in the near-dup increment). run_overlapped fails
+        # fast and re-raises, so a replay of this batch_id re-overwrites
+        # every directory (replay, never skip: streaming/overlap.py).
+        # Pruning runs strictly AFTER all writes landed.
+        run_overlapped(spark, jobs)
+        _prune_versions(state_path, batch_id)
+        if step is not None:
+            _prune_versions(rates_path, batch_id)
+            step[1].unpersist()
+    else:  # final flush — the stream is over, drop all state (rates too)
         _write_closed()
         shutil.rmtree(state_path, ignore_errors=True)
     l1.unpersist()
     hits.unpersist()
-
-
-def _prune_versions(state_path: str, keep_from: int) -> None:
-    """Drop state versions older than ``keep_from`` (the previous version
-    must survive so a replay of the CURRENT batch can still read it)."""
-    import shutil
-
-    for v in _state_versions(state_path):
-        if v < keep_from:
-            shutil.rmtree(_version_dir(state_path, v), ignore_errors=True)
 
 
 def incremental_cluster_query(
@@ -222,8 +258,6 @@ def incremental_cluster_query(
     state_path: str,
     checkpoint_dir: str,
     criterion: str = "physics",
-    gap_ns: int | None = None,
-    watermark_ns: int = 10_000_000_000,
 ):
     """Wire a streaming events DataFrame into the incremental clusterer.
     Returns the (unstarted) DataStreamWriter; call ``.start()``/
@@ -233,14 +267,7 @@ def incremental_cluster_query(
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         process_increment(
-            spark,
-            batch_df,
-            state_path,
-            out_path,
-            batch_id=batch_id,
-            criterion=criterion,
-            gap_ns=gap_ns,
-            watermark_ns=watermark_ns,
+            spark, batch_df, state_path, out_path, batch_id=batch_id, criterion=criterion
         )
 
     return events.writeStream.foreachBatch(fb).option("checkpointLocation", checkpoint_dir)
@@ -251,16 +278,14 @@ def flush_incremental_state(
     state_path: str,
     out_path: str,
     criterion: str = "physics",
-    gap_ns: int | None = None,
 ) -> None:
     """End-of-stream flush: cluster whatever the state still holds and
     write those groups as one final output batch directory."""
     versions = _state_versions(state_path)
     if not versions:
         return
-    latest = _version_dir(state_path, versions[-1])
-    empty = spark.createDataFrame([], spark.read.parquet(latest).select(*HIT_COLS).schema)
+    empty = spark.read.parquet(_version_dir(state_path, versions[-1])).limit(0)
     process_increment(
         spark, empty, state_path, out_path, batch_id=versions[-1] + 1,
-        criterion=criterion, gap_ns=gap_ns, final=True,
+        criterion=criterion, final=True,
     )

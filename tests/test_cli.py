@@ -181,6 +181,43 @@ def test_ingest_trigger_seconds_matches_stream():
             p.parse_args(argv + ["--trigger-seconds", bad])
 
 
+def test_stream_watermark_ns_is_checked_when_parsed():
+    """stream --watermark-ns takes 0 up to Spark's interval limit; Spark
+    itself refuses a negative delay and one past a signed 64-bit
+    microsecond count, but only after the session has started."""
+    import pytest
+
+    from detector_network_processor_spark.__main__ import _build_parser
+
+    p = _build_parser()
+    argv = [a.format(tmp="t") for a in STREAM_ARGS]
+    assert p.parse_args(argv).watermark_ns == 10_000_000_000
+    assert p.parse_args(argv + ["--watermark-ns", "0"]).watermark_ns == 0
+    top = p.parse_args(argv + ["--watermark-ns", "9223372036854775807"])
+    assert top.watermark_ns == 2**63 - 1
+    for bad in ("-1", "9223372036854775808", "1.5", "ten"):
+        with pytest.raises(SystemExit):
+            p.parse_args(argv + ["--watermark-ns", bad])
+
+
+def test_monitor_interval_ns_is_checked_when_parsed():
+    """monitor --interval-ns must hold at least one 30 s rate sub-interval:
+    below it the summary worker divides by zero sub-intervals when the
+    first window closes (and by a zero interval on the first row)."""
+    import pytest
+
+    from detector_network_processor_spark.__main__ import _build_parser
+
+    p = _build_parser()
+    argv = ["monitor", "--lines-dir", "l", "--stations-parquet", "s", "--out", "o",
+            "--checkpoint", "c"]
+    assert p.parse_args(argv).interval_ns == 120 * 10**9
+    assert p.parse_args(argv + ["--interval-ns", "30000000000"]).interval_ns == 30 * 10**9
+    for bad in ("0", "-1", "10000000000", "29999999999", "3e10"):
+        with pytest.raises(SystemExit):
+            p.parse_args(argv + ["--interval-ns", bad])
+
+
 def test_stream_daemon_drains_spool(spark):
     """stream --available-now lands exactly the batch L1 rows of the same
     parsed and gated lines, on a query started with one state partition,

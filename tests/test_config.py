@@ -128,6 +128,37 @@ def test_option_surface_is_pinned():
     }
 
 
+def test_entry_point_parameters_are_pinned():
+    """The coincidence entry points' parameters: a new knob on any of them
+    needs an edit to this test."""
+    import inspect
+
+    from detector_network_processor_spark.operators.coincidence import cluster_coincidences
+    from detector_network_processor_spark.streaming.coincidence import (
+        stream_cluster_coincidences,
+    )
+    from detector_network_processor_spark.streaming.incremental import (
+        flush_incremental_state,
+        incremental_cluster_query,
+        process_increment,
+    )
+    from detector_network_processor_spark.streaming.pipeline import stream_main_path
+
+    def params(fn):
+        return list(inspect.signature(fn).parameters)
+
+    assert params(cluster_coincidences) == ["events", "stations", "criterion"]
+    assert params(stream_cluster_coincidences) == ["events", "criterion", "watermark_ns"]
+    assert params(stream_main_path) == ["lines", "stations", "criterion", "watermark_ns"]
+    assert params(process_increment) == [
+        "spark", "batch", "state_path", "out_path", "batch_id", "criterion", "final",
+    ]
+    assert params(incremental_cluster_query) == [
+        "events", "out_path", "state_path", "checkpoint_dir", "criterion",
+    ]
+    assert params(flush_incremental_state) == ["spark", "state_path", "out_path", "criterion"]
+
+
 def test_interval_changes_detector_summary(spark):
     """A non-default detectorsummary interval must change the windowing of
     detector_summaries (the verdict's wiring criterion)."""

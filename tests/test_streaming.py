@@ -96,8 +96,14 @@ def test_incremental_matches_batch_coincidence(spark):
     """The foreachBatch incremental clusterer (the streaming SCALE path —
     distributed batch operator per micro-batch + carried open tail) must
     reproduce the offline batch result exactly, including sessions that
-    span micro-batch boundaries."""
+    span micro-batch boundaries. Its adaptive horizon changes WHEN groups
+    emit, never WHAT emits."""
+    from detector_network_processor_spark.operators.timebase import (
+        TIMEOUT_MAX_NS,
+        TIMEOUT_MIN_NS,
+    )
     from detector_network_processor_spark.streaming.incremental import (
+        _state_versions,
         flush_incremental_state,
         incremental_cluster_query,
     )
@@ -132,8 +138,15 @@ def test_incremental_matches_batch_coincidence(spark):
             .start()
         )
         q.awaitTermination(300)
-        # end-of-stream carried state exists (the last chunk's open tail)
-        assert os.path.isdir(state_path)
+        # end-of-stream carried state exists (the last chunk's open tail),
+        # with the horizon the next increment would read and the W2 rate
+        # table of the last increment
+        latest = _state_versions(state_path)[-1]
+        assert latest == 3
+        with open(f"{state_path}/v{latest:012d}/_horizon_ns") as f:
+            assert TIMEOUT_MIN_NS <= int(f.read()) <= TIMEOUT_MAX_NS
+        assert _state_versions(f"{state_path}/rates")[-1] == 3
+        assert spark.read.parquet(f"{state_path}/rates/v{3:012d}").count() > 0
         # the scale contract: the per-increment processing plan distributes
         # over a >1-partition range shuffle — no single-partition state
         # serialization anywhere (what the session_window path cannot avoid)
@@ -144,6 +157,7 @@ def test_incremental_matches_batch_coincidence(spark):
         assert "rangepartitioning(start" in plan, plan
         assert "rangepartitioning(start#" in plan and ", 1)" not in plan.split("rangepartitioning")[1][:80], plan
         flush_incremental_state(spark, state_path, out_path)
+        assert not os.path.exists(state_path)  # the flush drops tail, horizon and rates
         got = spark.read.parquet(out_path).collect()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -154,53 +168,95 @@ def test_incremental_matches_batch_coincidence(spark):
 
 
 def test_adaptive_timeout_responds_to_rate_dip(spark):
-    """W1-W3 live loop: a rate dip must widen the group timeout, exactly
-    like the reference's timebase_t feedback into the coincidence filter
-    (src/supervision/station.cpp:66-82) — and a foreachBatch replay of the
-    dip batch must not count it twice."""
+    """W1-W3 live loop: a rate dip must widen the horizon the next
+    increment reads, like the reference's timebase_t feedback into the
+    coincidence filter (src/supervision/station.cpp:66-82). The horizon is
+    versioned with the open tail, so a foreachBatch replay — in the same
+    query or after a restart — reads its first attempt's horizon, and a
+    replayed dip batch is not counted twice."""
     from detector_network_processor_spark.operators.timebase import NS
-    from detector_network_processor_spark.streaming.adaptive import (
-        AdaptiveTimeoutController,
+    from detector_network_processor_spark.streaming.incremental import process_increment
+
+    def hits(pairs):
+        return spark.createDataFrame(
+            [
+                dict(hash=h, start=t, end=t + 1000, time_acc=1, ublox_counter=0, fix=1,
+                     lat=47.0 + h * 0.01, lon=8.0, h=450.0)
+                for h, t in pairs
+            ],
+            "hash long, start long, end long, time_acc long, ublox_counter long, "
+            "fix long, lat double, lon double, h double",
+        )
+
+    # steady phase: 10 or 12 events / 30 s interval / station, 10
+    # intervals (against a constant history the dip factor is the same
+    # for any dip count, so a double-counted replay would not show)
+    steady = hits(
+        (h, (i * 30 + j * 2) * NS) for h in (1, 2) for i in range(10) for j in range(10 + 2 * (i % 2))
     )
+    dip = hits((h, (10 * 30 + 1) * NS) for h in (1, 2))  # 1 event in the next interval
+    after = hits((h, (11 * 30 + j * 2) * NS + h) for h in (1, 2) for j in range(10))
 
     tmp = tempfile.mkdtemp(prefix="dnp_adaptive_")
+    state, out = f"{tmp}/state", f"{tmp}/out"
+
+    def run(df, bid):
+        process_increment(spark, df, state, out, batch_id=bid)
+
+    def horizon(bid):
+        """The horizon batch bid + 1 reads."""
+        with open(f"{state}/v{bid:012d}/_horizon_ns") as f:
+            return int(f.read())
+
+    def snapshot(bid):
+        def rows(path):
+            return sorted(map(str, spark.read.parquet(path).collect()))
+
+        return (
+            rows(f"{out}/batch_id={bid}"),
+            rows(f"{state}/v{bid:012d}"),
+            rows(f"{state}/rates/v{bid:012d}"),
+            horizon(bid),
+        )
+
     try:
-        ctl = AdaptiveTimeoutController(spark, f"{tmp}/rates")
-        # steady phase: 10 or 12 events / 30 s interval / station, 10
-        # intervals (against a constant history the dip factor is the same
-        # for any dip count, so a double-counted replay would not show)
-        steady = [
-            dict(hash=h, start=(i * 30 + j * 2) * NS)
-            for h in (1, 2)
-            for i in range(10)
-            for j in range(10 + 2 * (i % 2))
-        ]
-        t_steady = ctl.update(spark.createDataFrame(steady), 0)
-        assert ctl.last_factor == 1.0
+        run(steady, 0)
+        assert horizon(0) == 2 * NS  # W1 800 ms x factor 1, clamped up to 2 s
+        run(dip, 1)
+        # the parent commit's in-memory controller gave the same sequence
+        # (2 s, 2 s, 6183695844 ns) on this input
+        assert horizon(1) == 6_183_695_844
+        run(dip, 1)  # replay in the same query: the dip is not counted twice
+        assert horizon(1) == 6_183_695_844
 
-        # dip phase: 1 event in the next interval
-        dip = spark.createDataFrame([dict(hash=h, start=(10 * 30 + 1) * NS) for h in (1, 2)])
-        t_dip = ctl.update(dip, 1)
-        assert ctl.last_factor > 1.0
-        assert t_dip > t_steady, (t_steady, t_dip)
+        run(after, 2)
+        first = snapshot(2)
+        # batch 2 clustered with the 6.18 s horizon: its sessions from
+        # 342 s on (2 hits each) stay open behind its newest event at 348 s;
+        # a 2 s horizon would keep only the last two
+        assert len(first[1]) == 8
+        assert horizon(2) == 2 * NS  # the rate recovered
+        # a restart replays batch 2: nothing but the state on disk carries
+        # over, and the replay reads batch 2's first-attempt horizon
+        run(after, 2)
+        assert snapshot(2) == first
 
-        # replay: after a crash foreachBatch re-runs batch 1 with the same
-        # id in a restarted query, i.e. a fresh controller on the same state
-        replayed = AdaptiveTimeoutController(spark, f"{tmp}/rates")
-        assert replayed.update(dip, 1) == t_dip
-        assert replayed.last_factor == ctl.last_factor
+        # an increment with no rows leaves the horizon unchanged
+        run(after.limit(0), 3)
+        assert horizon(3) == horizon(2)
+        assert not os.path.exists(f"{state}/rates/v{3:012d}")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_adaptive_incremental_matches_batch(spark):
-    """Adaptivity changes WHEN groups emit, never WHAT emits: the adaptive
-    incremental stream still equals the offline batch result."""
-    from detector_network_processor_spark.streaming.adaptive import (
-        adaptive_incremental_cluster_query,
-    )
+    """Adaptivity changes WHEN groups emit, never WHAT emits: the single
+    incremental entry point, reading its horizon from the versioned state,
+    still equals the offline batch result on a 3-micro-batch input."""
     from detector_network_processor_spark.streaming.incremental import (
+        _state_versions,
         flush_incremental_state,
+        incremental_cluster_query,
     )
 
     events = make_events(n_base=500, seed=31)
@@ -225,12 +281,14 @@ def test_adaptive_incremental_matches_batch(spark):
             spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{tmp}/in/f*")
         )
         out_path, state_path = f"{tmp}/out", f"{tmp}/state"
-        writer, ctl = adaptive_incremental_cluster_query(
-            stream, out_path, state_path, f"{tmp}/ckpt"
-        )
+        writer = incremental_cluster_query(stream, out_path, state_path, f"{tmp}/ckpt")
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination(300)
-        assert ctl.last_timebase_ns is not None  # the loop actually ran
+        # the loop actually ran: the last increment wrote the horizon the
+        # next one would read
+        latest = _state_versions(state_path)[-1]
+        assert latest == 2
+        assert os.path.isfile(f"{state_path}/v{latest:012d}/_horizon_ns")
         flush_incremental_state(spark, state_path, out_path)
         got = spark.read.parquet(out_path).collect()
     finally:
@@ -596,7 +654,9 @@ def test_increment_overlapped_write_failure_propagates(spark, monkeypatch):
     schema = spark.createDataFrame(enriched[:1]).schema
     real_parquet = DataFrameWriter.parquet
 
-    for fail_marker, fail_name in ((f"{os.sep}v000000000001", "state"), ("batch_id=1", "closed")):
+    # the open-tail version, not the rate table version under state/rates/
+    open_tail = f"state{os.sep}v000000000001"
+    for fail_marker, fail_name in ((open_tail, "state"), ("batch_id=1", "closed")):
         tmp = tempfile.mkdtemp(prefix="dnp_incfail_")
         try:
             out_path, state_path = f"{tmp}/out", f"{tmp}/state"
@@ -850,3 +910,24 @@ def test_session_path_guardrail_warns(spark):
         and "incremental_cluster_query" in str(c.message)
         for c in caught
     )
+
+
+def test_unknown_criterion_is_refused(spark):
+    """A misspelt criterion must fail when the plan is built, not silently
+    run the 100 µs simple criterion; both names still build."""
+    import pytest
+
+    batch = spark.createDataFrame(
+        [dict(hash=1, start=0, end=1, time_acc=1, ublox_counter=0, fix=1, lat=47.0, lon=8.0, h=450.0)]
+    )
+    stream = spark.readStream.format("rate").load().selectExpr(
+        "value as hash", "value as start", "value+1 as end", "1L as time_acc",
+        "0L as ublox_counter", "1L as fix", "47.0 as lat", "8.0 as lon", "450.0 as h",
+    )
+    for criterion in ("physics", "simple"):
+        cluster_coincidences(batch, criterion=criterion)
+        stream_cluster_coincidences(stream, criterion=criterion)
+    with pytest.raises(ValueError, match="phsyics"):
+        cluster_coincidences(batch, criterion="phsyics")
+    with pytest.raises(ValueError, match="phsyics"):
+        stream_cluster_coincidences(stream, criterion="phsyics")
