@@ -22,6 +22,7 @@ reference daemon.
 
 from __future__ import annotations
 from .config import python_stage_partitions
+from .constants import RATE_INTERVAL_NS
 
 import argparse
 import math
@@ -35,8 +36,6 @@ _CPUS_HELP = "local[N] threads (default $SPARK_GRAFT_CPUS or os.cpu_count())"
 # Spark holds an interval in microseconds, in a signed 64-bit long
 _MAX_INTERVAL_US = 2**63 - 1
 _MAX_TRIGGER_MS = _MAX_INTERVAL_US // 1000
-# the monitoring path's rate sub-interval; a summary window holds at least one
-_SUB_INTERVAL_NS = 30 * 10**9
 
 
 def _trigger_ms(seconds: float) -> int:
@@ -71,6 +70,20 @@ def _whole_ns(what: str, least: int):
     return ns
 
 
+def _fraction(text: str) -> float:
+    value = float(text)
+    if not 0.0 <= value <= 1.0:  # also refuses nan, which no est_jaccard reaches
+        raise argparse.ArgumentTypeError(f"{text!r}: a Jaccard threshold is a number from 0 to 1")
+    return value
+
+
+def _positive_int(text: str) -> int:
+    value = int(text)
+    if value < 1:
+        raise argparse.ArgumentTypeError(f"{text!r}: a whole number of at least 1")
+    return value
+
+
 def _add_trigger_seconds(parser: argparse.ArgumentParser) -> None:
     parser.add_argument(
         "--trigger-seconds",
@@ -102,7 +115,7 @@ def _build_parser() -> argparse.ArgumentParser:
     runp.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     runp.add_argument("--limit", type=int, default=20)
     runp.add_argument("--explain", action="store_true", help="print the physical plan instead of rows")
-    runp.add_argument("--cpus", default=None, help=_CPUS_HELP)
+    runp.add_argument("--cpus", type=_positive_int, default=None, help=_CPUS_HELP)
 
     op = sub.add_parser("oracle", help="print a query's DuckDB oracle SQL")
     op.add_argument("name")
@@ -122,7 +135,7 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     _add_trigger_seconds(sp)
     sp.add_argument("--available-now", action="store_true", help="drain the spool and exit")
-    sp.add_argument("--cpus", default=None, help=_CPUS_HELP)
+    sp.add_argument("--cpus", type=_positive_int, default=None, help=_CPUS_HELP)
 
     mon = sub.add_parser(
         "monitor", help="run the streaming monitoring path (detector summaries -> K1/K2 lines)"
@@ -138,11 +151,11 @@ def _build_parser() -> argparse.ArgumentParser:
     mon.add_argument("--output", choices=("text", "influx", "summary"), default="text")
     mon.add_argument(
         "--interval-ns",
-        type=_whole_ns("the summary interval (at least the 30 s sub-interval)", _SUB_INTERVAL_NS),
+        type=_whole_ns("the summary interval (at least the 30 s sub-interval)", RATE_INTERVAL_NS),
         default=120 * 10**9,
     )
     mon.add_argument("--available-now", action="store_true", help="drain the spool and exit")
-    mon.add_argument("--cpus", default=None, help=_CPUS_HELP)
+    mon.add_argument("--cpus", type=_positive_int, default=None, help=_CPUS_HELP)
 
     ing = sub.add_parser(
         "ingest", help="stream documents against the persistent near-dup index"
@@ -151,10 +164,10 @@ def _build_parser() -> argparse.ArgumentParser:
     ing.add_argument("--index", required=True, help="persistent MinHash band-index dir")
     ing.add_argument("--out", required=True, help="near-dup pair output dir (batch_id partitions)")
     ing.add_argument("--checkpoint", required=True)
-    ing.add_argument("--threshold", type=float, default=0.5)
+    ing.add_argument("--threshold", type=_fraction, default=0.5)
     _add_trigger_seconds(ing)
     ing.add_argument("--available-now", action="store_true", help="drain the spool and exit")
-    ing.add_argument("--cpus", default=None, help=_CPUS_HELP)
+    ing.add_argument("--cpus", type=_positive_int, default=None, help=_CPUS_HELP)
 
     mat = sub.add_parser(
         "materialize",
@@ -171,13 +184,13 @@ def _build_parser() -> argparse.ArgumentParser:
         "table (zero-Exchange station aggs/joins) instead of the plain "
         "day-partitioned directory layout",
     )
-    mat.add_argument("--buckets", type=int, default=None, help="bucket count (default 64)")
+    mat.add_argument("--buckets", type=_positive_int, default=None, help="bucket count (default 64)")
     mat.add_argument(
         "--table-name",
         default="events_bucketed",
         help="catalog table name for --bucket-by-station",
     )
-    mat.add_argument("--cpus", default=None, help=_CPUS_HELP)
+    mat.add_argument("--cpus", type=_positive_int, default=None, help=_CPUS_HELP)
 
     cp = sub.add_parser(
         "compact",
@@ -186,7 +199,7 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     cp.add_argument("--in", dest="in_dir", required=True, help="parquet docs (doc_id, text, ...)")
     cp.add_argument("--out", required=True)
-    cp.add_argument("--jaccard", type=float, default=0.5, help="near-dup signature-agreement threshold")
+    cp.add_argument("--jaccard", type=_fraction, default=0.5, help="near-dup signature-agreement threshold")
     cp.add_argument(
         "--clone-safe",
         action="store_true",
@@ -196,14 +209,14 @@ def _build_parser() -> argparse.ArgumentParser:
         "recall-leaning: bucket agreement is the only membership evidence, "
         "so --jaccard is ignored in this mode",
     )
-    cp.add_argument("--cpus", default=None, help=_CPUS_HELP)
+    cp.add_argument("--cpus", type=_positive_int, default=None, help=_CPUS_HELP)
 
     ver = sub.add_parser(
         "verify", help="hash-compare registered queries against their DuckDB oracles"
     )
     ver.add_argument("names", nargs="*", help="query names (default: all with oracles)")
     ver.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ver.add_argument("--cpus", default=None, help=_CPUS_HELP)
+    ver.add_argument("--cpus", type=_positive_int, default=None, help=_CPUS_HELP)
     return p
 
 

@@ -43,6 +43,10 @@ MAX_LOCATION_ERROR_M = MAX_TIMING_ERROR_NS * C_M_PER_NS
 HYSTERESIS = 0.15
 STDDEV_FACTOR = 0.75
 
+# Station rate interval: rates are counted per 30 s interval (libmuonpi
+# rate_measurement, 10 intervals x 30 s; src/analysis/detectorstation.cpp:127-135).
+RATE_INTERVAL_NS = 30 * 10**9
+
 # Station lifecycle processing-time timers (seconds).
 LOG_INTERVAL_S = 90
 OFFLINE_INTERVAL_S = 270

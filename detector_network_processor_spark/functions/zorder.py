@@ -20,11 +20,11 @@ from pyspark.sql import Column
 ZORDER_BITS = 16  # per dimension -> 32-bit Morton key
 
 
-def zorder_key(x: Column, y: Column, bits: int = ZORDER_BITS) -> Column:
-    """Morton-interleave the low ``bits`` of two non-negative int columns:
+def zorder_key(x: Column, y: Column) -> Column:
+    """Morton-interleave the low ``ZORDER_BITS`` of two non-negative int columns:
     bit i of x lands at position 2i, bit i of y at 2i+1."""
     acc = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         acc = acc.bitwiseOR(
             F.shiftleft(F.shiftright(x.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i)
         ).bitwiseOR(
@@ -33,10 +33,10 @@ def zorder_key(x: Column, y: Column, bits: int = ZORDER_BITS) -> Column:
     return acc
 
 
-def zorder_key_sql(x: str, y: str, bits: int = ZORDER_BITS) -> str:
+def zorder_key_sql(x: str, y: str) -> str:
     """The identical Morton encoder as an ANSI-SQL expression (oracle side)."""
     terms = []
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return "(" + " | ".join(terms) + ")"

@@ -36,9 +36,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def ts_to_us(df: DataFrame, col: str = "ts") -> Column:
-    """Exact int64 epoch-microseconds from either fixture encoding of a
-    timestamp column — the engine's boundary normalization (the reference
+def ts_to_us(df: DataFrame) -> Column:
+    """Exact int64 epoch-microseconds from either fixture encoding of the
+    ``ts`` column — the engine's boundary normalization (the reference
     ingests typed ns structs, src/messages/event.h; a Spark engine must
     adapt to whatever the scan delivers).
 
@@ -51,12 +51,12 @@ def ts_to_us(df: DataFrame, col: str = "ts") -> Column:
 
     Purely a column expression — stays inside whole-stage codegen, no UDF.
     """
-    dtype = dict(df.dtypes)[col]
+    dtype = dict(df.dtypes)["ts"]
     if dtype == "bigint":
-        return F.expr(f"{col} div 1000")
+        return F.expr("ts div 1000")
     if dtype.startswith("timestamp"):
-        return F.unix_micros(F.col(col).cast("timestamp"))
-    raise TypeError(f"unsupported dtype for {col!r}: {dtype}")
+        return F.unix_micros(F.col("ts").cast("timestamp"))
+    raise TypeError(f"unsupported dtype for 'ts': {dtype}")
 
 
 _ROWCOUNT_CACHE: dict[str, int] = {}
@@ -85,12 +85,7 @@ def table_row_count(sf_dir: str, name: str) -> int:
 # --------------------------------------------------------------------------
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Hive-style partitioned parquet layout: one directory level per
     partition column. Readers with equality/range predicates on these
     columns get PARTITION PRUNING — whole directories skipped before any
@@ -98,7 +93,7 @@ def write_partitioned(
     one day of it. Time-derived columns (e.g. ``day = ts div 86400e9``)
     are the canonical choice for the event stream; keep cardinality
     per level ≤ ~10^4 so the file listing stays metadata-cheap."""
-    df.write.partitionBy(*partition_cols).mode(mode).parquet(path)
+    df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
 
 
 def write_bucketed(
@@ -107,7 +102,6 @@ def write_bucketed(
     bucket_col: str,
     n_buckets: int,
     sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed (hash-clustered) table: rows are pre-shuffled into
     ``n_buckets`` files by ``hash(bucket_col)`` at WRITE time, so every
@@ -119,7 +113,7 @@ def write_bucketed(
     w = df.write.bucketBy(n_buckets, bucket_col)
     if sort_col:
         w = w.sortBy(sort_col)
-    w.mode(mode).format("parquet").saveAsTable(table)
+    w.mode("overwrite").format("parquet").saveAsTable(table)
 
 
 DAY_US = 86_400_000_000
@@ -131,7 +125,6 @@ def materialize_events_bucketed(
     sf_dir: str,
     table: str = "events_bucketed",
     n_buckets: int = EVENTS_BUCKETS,
-    mode: str = "overwrite",
 ) -> None:
     """The 100 TB at-rest layout for the event stream, combining BOTH
     storage optimizations (SCALING.md open item; reference analog: the
@@ -157,7 +150,7 @@ def materialize_events_bucketed(
         .write.partitionBy("day")
         .bucketBy(n_buckets, "user_id")
         .sortBy("user_id", "ts")
-        .mode(mode)
+        .mode("overwrite")
         .format("parquet")
         .saveAsTable(table)
     )
@@ -168,13 +161,12 @@ def materialize_station_dim_bucketed(
     table: str = "stations_bucketed",
     key_col: str = "hash",
     n_buckets: int = EVENTS_BUCKETS,
-    mode: str = "overwrite",
 ) -> None:
     """Station dimension bucketed IDENTICALLY to the event stream (same
     bucket count, same hash function — Spark's Murmur3 on the key), so the
     enrichment join co-locates bucket-for-bucket with zero Exchange on
     either side. At fixture scale the dimension broadcasts anyway; at
     10^6+ stations with fat metadata columns this is the join layout."""
-    stations.write.bucketBy(n_buckets, key_col).sortBy(key_col).mode(mode).format(
+    stations.write.bucketBy(n_buckets, key_col).sortBy(key_col).mode("overwrite").format(
         "parquet"
     ).saveAsTable(table)

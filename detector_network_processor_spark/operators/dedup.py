@@ -31,6 +31,10 @@ MINHASH_K = 64
 LSH_BANDS = 16
 LSH_ROWS = MINHASH_K // LSH_BANDS
 
+# the document frame's columns (the documents fixture and every ingest spool)
+DOC_ID = "doc_id"
+TEXT = "text"
+
 _SHINGLE_W = 3
 
 # Portable-hash family: Karp-Rabin modular arithmetic instead of xxhash64.
@@ -66,9 +70,7 @@ def portable_combine(parts: list, base: int = PORTABLE_BAND_BASE):
     return acc
 
 
-def hashed_shingles(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", portable: bool = False
-) -> DataFrame:
+def hashed_shingles(docs: DataFrame, portable: bool = False) -> DataFrame:
     """(id, _sh array<long>) — distinct 64-bit shingle ids per document.
 
     Two staged projections, all JVM-side: hash every token ONCE into a
@@ -81,14 +83,14 @@ def hashed_shingles(
 
     ``portable=True`` swaps xxhash64 for the Karp-Rabin family so the DuckDB
     oracle can recompute identical shingle ids."""
-    t = F.split(F.col(text_col), " ")
+    t = F.split(F.col(TEXT), " ")
     if portable:
         th = F.transform(t, lambda w: kr_token_hash(w))
         combine = lambda a, b, c: portable_combine([a, b, c], PORTABLE_SHINGLE_BASE)  # noqa: E731
     else:
         th = F.transform(t, lambda w: F.xxhash64(w))
         combine = F.xxhash64
-    staged = docs.filter(F.size(t) >= _SHINGLE_W).select(F.col(id_col), th.alias("_th"))
+    staged = docs.filter(F.size(t) >= _SHINGLE_W).select(F.col(DOC_ID), th.alias("_th"))
     sh = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.size(F.col("_th")) - (_SHINGLE_W - 1)),
@@ -99,7 +101,7 @@ def hashed_shingles(
             ),
         )
     )
-    return staged.select(id_col, sh.alias("_sh"))
+    return staged.select(DOC_ID, sh.alias("_sh"))
 
 
 _MERSENNE_P = 2_147_483_647  # 2^31 - 1
@@ -147,9 +149,7 @@ def _make_signature_udf():
 _SIGNATURE_UDF = None
 
 
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", portable: bool = False
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, portable: bool = False) -> DataFrame:
     """(id, signature array<long>[K]). Documents shorter than one shingle
     are dropped (no signature is defined for them).
 
@@ -162,8 +162,8 @@ def minhash_signatures(
     global _SIGNATURE_UDF
     if _SIGNATURE_UDF is None:
         _SIGNATURE_UDF = _make_signature_udf()
-    return hashed_shingles(docs, id_col, text_col, portable=portable).select(
-        id_col, _SIGNATURE_UDF(F.col("_sh")).alias("signature")
+    return hashed_shingles(docs, portable=portable).select(
+        DOC_ID, _SIGNATURE_UDF(F.col("_sh")).alias("signature")
     )
 
 
@@ -184,7 +184,7 @@ def band_hash_array(portable: bool = False):
     return F.transform(F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)), lambda b: bhash_of(b))
 
 
-def band_rows(signatures: DataFrame, id_col: str = "doc_id", portable: bool = False) -> DataFrame:
+def band_rows(signatures: DataFrame, portable: bool = False) -> DataFrame:
     """Explode signatures into LSH band rows (id, signature, band, bhash)
     — the join key-space for bucket collision, shared by the batch
     self-join and the incremental dedup-against-index path.
@@ -198,50 +198,43 @@ def band_rows(signatures: DataFrame, id_col: str = "doc_id", portable: bool = Fa
     python_arrow 1 -> 2 on dedup_components_lsh; the inline form plans
     one ArrowEvalPython and no inferred filter)."""
     return signatures.select(
-        id_col, "signature", F.posexplode(band_hash_array(portable)).alias("band", "bhash")
+        DOC_ID, "signature", F.posexplode(band_hash_array(portable)).alias("band", "bhash")
     )
 
 
-def explode_band_hashes(compact: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def explode_band_hashes(compact: DataFrame) -> DataFrame:
     """(id, signature, bhashes array) -> (id, signature, band, bhash):
     the codegen-cheap reconstruction of band rows from the COMPACT form.
     For STORED indexes only (the bhashes column is a real parquet
     column, so the Generate-inferred size filter is a cheap scan-level
     predicate); live plans use band_rows — see its docstring for the
     UDF-duplication trap this split avoids."""
-    return compact.select(
-        id_col, "signature", F.posexplode("bhashes").alias("band", "bhash")
-    )
+    return compact.select(DOC_ID, "signature", F.posexplode("bhashes").alias("band", "bhash"))
 
 
 def minhash_lsh_pairs(
-    signatures: DataFrame, id_col: str = "doc_id", portable: bool = False,
-    materialized: bool = False, min_est: float | None = None,
+    signatures: DataFrame, portable: bool = False, min_est: float | None = None
 ) -> DataFrame:
     """Candidate pairs from LSH banding, scored by signature agreement.
 
     Returns (doc_a, doc_b, est_jaccard) for pairs colliding in >=1 band.
 
-    ``materialized=True`` promises the input is ALREADY a materialized
-    checkpoint/cache — skips the defensive re-checkpoint, which is a
-    whole redundant job copying every signature block (the incremental
-    ingest path paid it once per batch). ``min_est`` applies the caller's
-    jaccard threshold BEFORE the pair-dedup exchange: a filter placed
-    after this function sits above a first()-aggregate Catalyst cannot
-    push through, so below-threshold pairs would ride the shuffle just to
-    be dropped — pass the threshold here instead (identical output to
-    filtering after; pinned by tests/test_dedup.py)."""
+    ``min_est`` applies the caller's jaccard threshold BEFORE the
+    pair-dedup exchange: a filter placed after this function sits above a
+    first()-aggregate Catalyst cannot push through, so below-threshold
+    pairs would ride the shuffle just to be dropped — pass the threshold
+    here instead (identical output to filtering after; pinned by
+    tests/test_dedup.py)."""
     # signatures feed both sides of the self-join — materialize once
     # (eager: lazy checkpoints can be raced into duplicate computation by
     # concurrent consumer jobs)
-    if not materialized:
-        signatures = signatures.localCheckpoint(eager=True)
-    exploded = band_rows(signatures, id_col, portable)
+    signatures = signatures.localCheckpoint(eager=True)
+    exploded = band_rows(signatures, portable)
     a = exploded.select(
-        F.col(id_col).alias("doc_a"), F.col("signature").alias("sig_a"), "band", "bhash"
+        F.col(DOC_ID).alias("doc_a"), F.col("signature").alias("sig_a"), "band", "bhash"
     )
     b = exploded.select(
-        F.col(id_col).alias("doc_b"), F.col("signature").alias("sig_b"), "band", "bhash"
+        F.col(DOC_ID).alias("doc_b"), F.col("signature").alias("sig_b"), "band", "bhash"
     )
     agree = F.size(
         F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
@@ -271,9 +264,7 @@ def minhash_lsh_pairs(
     )
 
 
-def lsh_star_edges(
-    signatures: DataFrame, id_col: str = "doc_id", portable: bool = False
-) -> DataFrame:
+def lsh_star_edges(signatures: DataFrame, portable: bool = False) -> DataFrame:
     """Spanning-STAR edges per LSH bucket: for each (band, bhash) bucket,
     one edge (bucket-min id, member) per other member — O(docs x bands)
     edges total, versus the O(sum_buckets |bucket|^2) of full within-bucket
@@ -296,21 +287,21 @@ def lsh_star_edges(
     """
     from pyspark.sql import Window
 
-    exploded = band_rows(signatures, id_col, portable).select(id_col, "band", "bhash")
+    exploded = band_rows(signatures, portable).select(DOC_ID, "band", "bhash")
     # One shuffle on the bucket key; a mega-bucket (all K clones of a hot
     # doc) is a single wide-but-narrow task computing one min — skew-safe.
-    root = F.min(id_col).over(Window.partitionBy("band", "bhash"))
+    root = F.min(DOC_ID).over(Window.partitionBy("band", "bhash"))
     return (
-        exploded.select(root.alias("doc_a"), F.col(id_col).alias("doc_b"))
+        exploded.select(root.alias("doc_a"), F.col(DOC_ID).alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
         .distinct()
     )
 
 
-def simhash_col(text_col: str = "text"):
+def simhash_col():
     """64-bit SimHash as a JVM column expression: for each bit position,
     sign of the sum of +-1 contributions from each distinct token's hash."""
-    toks = F.array_distinct(F.split(F.col(text_col), " "))
+    toks = F.array_distinct(F.split(F.col(TEXT), " "))
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
 
     def bit(i: int):
@@ -331,17 +322,15 @@ def simhash_col(text_col: str = "text"):
 SIMHASH_PORTABLE_BITS = 62  # 2 x 31-bit Karp-Rabin families
 
 
-def simhash_portable_fingerprints(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_portable_fingerprints(docs: DataFrame) -> DataFrame:
     """(id, simhash) with a 62-bit portable fingerprint: bits 0-30 vote on
     one Karp-Rabin family, bits 31-61 on an independent-base family — every
     step reproducible in ANSI SQL. Tokens explode to rows so the 62 vote
     sums run as one JVM hash aggregation instead of 62 interpreted
     array-aggregate passes per document."""
-    toks = F.array_distinct(F.split(F.col(text_col), " "))
-    ex = docs.select(F.col(id_col), F.explode(toks).alias("_w")).select(
-        id_col,
+    toks = F.array_distinct(F.split(F.col(TEXT), " "))
+    ex = docs.select(F.col(DOC_ID), F.explode(toks).alias("_w")).select(
+        DOC_ID,
         kr_token_hash(F.col("_w"), PORTABLE_TOKEN_BASE).alias("_h1"),
         kr_token_hash(F.col("_w"), PORTABLE_TOKEN_BASE2).alias("_h2"),
     )
@@ -351,23 +340,21 @@ def simhash_portable_fingerprints(
         bit = F.shiftright(src, i % 31).bitwiseAND(F.lit(1))
         return F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f"_v{i}")
 
-    agg = ex.groupBy(id_col).agg(*[vote(i) for i in range(SIMHASH_PORTABLE_BITS)])
+    agg = ex.groupBy(DOC_ID).agg(*[vote(i) for i in range(SIMHASH_PORTABLE_BITS)])
     sim = F.lit(0).cast("long")
     for i in range(SIMHASH_PORTABLE_BITS):
         b = F.when(F.col(f"_v{i}") > 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
         sim = sim.bitwiseOR(F.shiftleft(b, i))
-    return agg.select(id_col, sim.alias("simhash"))
+    return agg.select(DOC_ID, sim.alias("simhash"))
 
 
-def simhash_near_dups(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", portable: bool = False
-) -> DataFrame:
+def simhash_near_dups(docs: DataFrame, portable: bool = False) -> DataFrame:
     """Near-dup pairs by SimHash banding: 4x16-bit chunks, candidates share
     >=1 exact chunk; scored by full hamming distance (JVM bit ops)."""
     if portable:
-        sh = simhash_portable_fingerprints(docs, id_col, text_col)
+        sh = simhash_portable_fingerprints(docs)
     else:
-        sh = docs.select(F.col(id_col), simhash_col(text_col).alias("simhash"))
+        sh = docs.select(F.col(DOC_ID), simhash_col().alias("simhash"))
     # Both sides of the banding self-join consume `sh`; without a persist
     # barrier the token-explode + 62-vote aggregation is inlined into each
     # side and computes twice. The fingerprint frame is (id, int64) — tiny.
@@ -381,11 +368,11 @@ def simhash_near_dups(
             for c in range(4)
         ]
     )
-    exploded = sh.select(id_col, "simhash", F.explode(chunks).alias("cc")).select(
-        id_col, "simhash", F.col("cc.chunk").alias("chunk"), F.col("cc.chash").alias("chash")
+    exploded = sh.select(DOC_ID, "simhash", F.explode(chunks).alias("cc")).select(
+        DOC_ID, "simhash", F.col("cc.chunk").alias("chunk"), F.col("cc.chash").alias("chash")
     )
-    a = exploded.select(F.col(id_col).alias("doc_a"), F.col("simhash").alias("sim_a"), "chunk", "chash")
-    b = exploded.select(F.col(id_col).alias("doc_b"), F.col("simhash").alias("sim_b"), "chunk", "chash")
+    a = exploded.select(F.col(DOC_ID).alias("doc_a"), F.col("simhash").alias("sim_a"), "chunk", "chash")
+    b = exploded.select(F.col(DOC_ID).alias("doc_b"), F.col("simhash").alias("sim_b"), "chunk", "chash")
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
         a.join(b, ["chunk", "chash"])

@@ -26,6 +26,12 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
 LSH_SEED = 1234567
+LSH_PLANES = 6  # hyperplanes per table: 2^6 buckets
+LSH_TABLES = 8
+
+# the embeddings frame's columns (the embeddings fixture)
+VEC_ID = "vec_id"
+VEC = "embedding"
 
 
 def _as_double(col):
@@ -36,7 +42,7 @@ def dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def lcg_planes(n_rows: int, dim: int, seed: int = LSH_SEED) -> np.ndarray:
+def lcg_planes(n_rows: int, dim: int) -> np.ndarray:
     """Deterministic hyperplanes in [-1, 1) from a Lehmer-style integer mix.
 
     Random-hyperplane LSH only needs directionally-spread planes, not
@@ -45,23 +51,23 @@ def lcg_planes(n_rows: int, dim: int, seed: int = LSH_SEED) -> np.ndarray:
     identical matrix from the same formula (plans/llm.py cosine_topk_lsh
     oracle), which a seeded RNG cannot offer cross-engine."""
     m = 2147483647
-    idx = np.arange(n_rows * dim, dtype=np.int64) + 1 + seed
+    idx = np.arange(n_rows * dim, dtype=np.int64) + 1 + LSH_SEED
     h = (idx * 48271) % m
     h = (h * 16807) % m
     return ((h.astype(np.float64) / 2147483647.0) * 2.0 - 1.0).reshape(n_rows, dim)
 
 
-def _bucket_udf(dim: int, n_planes: int, n_tables: int, seed: int = LSH_SEED):
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
+def _bucket_udf(dim: int):
+    weights = (1 << np.arange(LSH_PLANES)).astype(np.int64)
 
     @pandas_udf(ArrayType(LongType()))
     def buckets(vecs: pd.Series) -> pd.Series:
-        planes = lcg_planes(n_tables * n_planes, dim, seed)
+        planes = lcg_planes(LSH_TABLES * LSH_PLANES, dim)
         v = np.stack([np.asarray(x, dtype=np.float64) for x in vecs])
         bits = (v @ planes.T) > 0  # (n, tables*planes)
         per_table = [
-            bits[:, t * n_planes : (t + 1) * n_planes].astype(np.int64) @ weights
-            for t in range(n_tables)
+            bits[:, t * LSH_PLANES : (t + 1) * LSH_PLANES].astype(np.int64) @ weights
+            for t in range(LSH_TABLES)
         ]
         arr = np.stack(per_table, axis=1)  # (n, tables)
         return pd.Series(list(arr))
@@ -74,11 +80,6 @@ def cosine_topk_lsh(
     queries: DataFrame,
     dim: int,
     k: int = 5,
-    n_planes: int = 6,
-    n_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    multiprobe_bits: int = 1,
 ) -> DataFrame:
     """Approximate top-k neighbors per query via multi-table hyperplane LSH.
 
@@ -87,21 +88,22 @@ def cosine_topk_lsh(
 
     Note: on uniform-random embeddings (the driver fixture) nearest
     neighbors are barely closer than random vectors — the adversarial case
-    for LSH; defaults are tuned for recall ~0.8 at ~2x pruning there.
+    for LSH; LSH_PLANES x LSH_TABLES are tuned for recall ~0.8 at ~2x pruning there.
     Clustered real-world embeddings prune far harder at the same recall.
     """
-    bucketer = _bucket_udf(dim, n_planes, n_tables)
+    bucketer = _bucket_udf(dim)
 
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
+    c = corpus.select(F.col(VEC_ID).alias("neighbor_id"), F.col(VEC).alias("cvec"))
     c_idx = c.select(
         "neighbor_id", F.posexplode(bucketer("cvec")).alias("table", "bucket")
     )
 
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
+    q = queries.select(F.col(VEC_ID).alias("query_id"), F.col(VEC).alias("qvec"))
     q_idx = q.select("query_id", F.posexplode(bucketer("qvec")).alias("table", "bucket"))
-    if multiprobe_bits >= 1:
-        flips = F.array(F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)])
-        q_idx = q_idx.select("query_id", "table", F.explode(flips).alias("bucket"))
+    # single-bit multiprobe: each query also probes its LSH_PLANES
+    # hamming-adjacent buckets per table
+    flips = F.array(F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(LSH_PLANES)])
+    q_idx = q_idx.select("query_id", "table", F.explode(flips).alias("bucket"))
 
     candidates = q_idx.join(c_idx, ["table", "bucket"]).select("query_id", "neighbor_id").distinct()
 
@@ -132,8 +134,6 @@ def cosine_threshold_join(
     emb: DataFrame,
     threshold: float,
     n_pivots: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """EXACT all-pairs cosine-threshold self-join (vec_a < vec_b, sim >
     threshold) without an all-pairs broadcast nested-loop plan.
@@ -171,7 +171,7 @@ def cosine_threshold_join(
     theta = float(np.arccos(min(max(threshold, -1.0), 1.0)))
     spark = emb.sparkSession
 
-    v = emb.select(F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v"))
+    v = emb.select(F.col(VEC_ID).alias("vid"), _as_double(F.col(VEC)).alias("v"))
 
     # Deterministic pivots: the first n_pivots vectors, unit-normalized,
     # collected to the driver — O(k · dim) doubles, same driver-cost class
@@ -272,26 +272,23 @@ def cosine_threshold_join(
     )
 
 
-def ivf_assign(corpus: DataFrame, centroids: DataFrame, dim: int,
-               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def ivf_assign(corpus: DataFrame, centroids: DataFrame, dim: int) -> DataFrame:
     """IVF coarse assignment: nearest centroid per vector (broadcast the
     centroid table; at 100 TB this is the standard partition-pruned ANN
     layout — vectors co-partitioned by centroid id).
 
     centroids: (centroid_id, centroid array<double>).
     """
-    return _nearest_centroids(corpus, centroids, 1, id_col, vec_col).select(
-        id_col, "centroid_id", F.col("e").alias("embedding")
+    return _nearest_centroids(corpus, centroids, 1).select(
+        VEC_ID, "centroid_id", F.col("e").alias(VEC)
     )
 
 
-def _nearest_centroids(
-    vecs: DataFrame, centroids: DataFrame, n: int, id_col: str, vec_col: str
-) -> DataFrame:
+def _nearest_centroids(vecs: DataFrame, centroids: DataFrame, n: int) -> DataFrame:
     """(id, centroid_id, e) for each vector's n nearest centroids
     (L2; ties broken by centroid_id). Centroid table is broadcast — the
     cross product never shuffles the big side."""
-    c = vecs.select(F.col(id_col), _as_double(F.col(vec_col)).alias("e"))
+    c = vecs.select(F.col(VEC_ID), _as_double(F.col(VEC)).alias("e"))
     cent = centroids.select(
         F.col("centroid_id"), _as_double(F.col("centroid")).alias("ce")
     )
@@ -299,12 +296,12 @@ def _nearest_centroids(
     d2 = F.aggregate(
         F.zip_with("e", "ce", lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, x: acc + x
     )
-    w = Window.partitionBy(id_col).orderBy(F.asc("d2"), F.asc("centroid_id"))
+    w = Window.partitionBy(VEC_ID).orderBy(F.asc("d2"), F.asc("centroid_id"))
     return (
         joined.withColumn("d2", d2)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= n)
-        .select(id_col, "centroid_id", "e")
+        .select(VEC_ID, "centroid_id", "e")
     )
 
 
@@ -315,8 +312,6 @@ def ivf_topk(
     dim: int,
     k: int = 5,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-flat approximate top-k: corpus vectors live in inverted lists
     keyed by nearest centroid; each query scores ONLY the lists of its
@@ -329,11 +324,11 @@ def ivf_topk(
     no LSH-over-full-scan variant achieves. The candidate join is a hash
     equi-join on centroid_id; the broadcast centroid table is tiny
     (n_lists x dim doubles)."""
-    lists = _nearest_centroids(corpus, centroids, 1, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "centroid_id", F.col("e").alias("ce")
+    lists = _nearest_centroids(corpus, centroids, 1).select(
+        F.col(VEC_ID).alias("neighbor_id"), "centroid_id", F.col("e").alias("ce")
     )
-    probes = _nearest_centroids(queries, centroids, nprobe, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), "centroid_id", F.col("e").alias("qe")
+    probes = _nearest_centroids(queries, centroids, nprobe).select(
+        F.col(VEC_ID).alias("query_id"), "centroid_id", F.col("e").alias("qe")
     )
     sim = dot(F.col("qe"), F.col("ce")) / (
         F.sqrt(dot(F.col("qe"), F.col("qe"))) * F.sqrt(dot(F.col("ce"), F.col("ce")))
@@ -356,8 +351,7 @@ PQ_M = 4  # subspaces
 PQ_K = 16  # codes per subspace
 
 
-def pq_encode(corpus: DataFrame, codebook, dim: int,
-              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def pq_encode(corpus: DataFrame, codebook, dim: int) -> DataFrame:
     """(id, codes array<int>[M]): each vector compressed to M sub-space
     codebook indices (argmin L2 per subspace, ties to the lower code).
 
@@ -373,9 +367,6 @@ def pq_encode(corpus: DataFrame, codebook, dim: int,
     fold (numpy's pairwise .sum() would diverge in ulps and flip argmin
     ties cross-engine).
     """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     sub = dim // PQ_M
     cb = np.asarray(codebook, dtype=np.float64)  # (M, K, sub)
 
@@ -394,23 +385,12 @@ def pq_encode(corpus: DataFrame, codebook, dim: int,
             out[:, m] = np.argmin(d2, axis=1)  # ties -> lowest code
         return pd.Series(list(out))
 
-    return corpus.select(F.col(id_col), encode(_as_double(F.col(vec_col))).alias("codes"))
+    return corpus.select(F.col(VEC_ID), encode(_as_double(F.col(VEC))).alias("codes"))
 
 
-def pq_topk(queries: DataFrame, codes: DataFrame, codebook, dim: int, k: int = 5,
-            id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: each query computes
-    its M x K lookup table of sub-space distances ONCE (Arrow stage over
-    the tiny query frame), the LUT rides a broadcast join onto the code
-    table, and the approximate distance is M element_at's + M-1 additions
-    per candidate — pure whole-stage-codegen arithmetic, no per-candidate
-    float vectors. Shuffle shape: broadcast(queries) x codes scan, then
-    WindowGroupLimit top-k — the corpus is never re-shuffled.
-
-    Returns (query_id, neighbor_id, rank, adc_d2)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
+def _lut_udf(codebook, dim: int):
+    """Arrow kernel: each query's M x K table of sub-space squared
+    distances to the codes, in pq_encode's fixed-order fold."""
     sub = dim // PQ_M
     cb = np.asarray(codebook, dtype=np.float64)
 
@@ -423,28 +403,45 @@ def pq_topk(queries: DataFrame, codes: DataFrame, codebook, dim: int, k: int = 5
         for m in range(PQ_M):
             s = Q[:, m * sub:(m + 1) * sub]
             d2 = np.zeros((Q.shape[0], PQ_K))
-            for d in range(sub):  # same fixed-order fold as pq_encode
+            for d in range(sub):
                 diff = s[:, d:d + 1] - cb[m, :, d][None, :]
                 d2 += diff * diff
             out[:, m * PQ_K:(m + 1) * PQ_K] = d2
         return pd.Series(list(out))
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"), lut(_as_double(F.col(vec_col))).alias("lut")
-    )
-    c = codes.select(F.col(id_col).alias("neighbor_id"), "codes")
-    # ((t0 + t1) + t2) + t3 — explicit association so both engines add in
-    # the same order
+    return lut
+
+
+def _adc():
+    """ADC distance of the ``codes`` column under the ``lut`` column:
+    ((t0 + t1) + t2) + t3 — explicit association so both engines add in
+    the same order."""
     adc = None
     for m in range(PQ_M):
         term = F.element_at(
             F.col("lut"), m * PQ_K + F.element_at(F.col("codes"), m + 1) + 1
         )
         adc = term if adc is None else adc + term
+    return adc
+
+
+def pq_topk(queries: DataFrame, codes: DataFrame, codebook, dim: int, k: int = 5) -> DataFrame:
+    """Asymmetric-distance (ADC) top-k over PQ codes: each query computes
+    its M x K lookup table of sub-space distances ONCE (Arrow stage over
+    the tiny query frame), the LUT rides a broadcast join onto the code
+    table, and the approximate distance is M element_at's + M-1 additions
+    per candidate — pure whole-stage-codegen arithmetic, no per-candidate
+    float vectors. Shuffle shape: broadcast(queries) x codes scan, then
+    WindowGroupLimit top-k — the corpus is never re-shuffled.
+
+    Returns (query_id, neighbor_id, rank, adc_d2)."""
+    lut = _lut_udf(codebook, dim)
+    q = queries.select(F.col(VEC_ID).alias("query_id"), lut(_as_double(F.col(VEC))).alias("lut"))
+    c = codes.select(F.col(VEC_ID).alias("neighbor_id"), "codes")
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("neighbor_id"))
     return (
         c.join(F.broadcast(q))
-        .withColumn("adc_d2", adc)
+        .withColumn("adc_d2", _adc())
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", F.round("adc_d2", 6).alias("adc_d2"))
@@ -459,8 +456,6 @@ def ivfpq_topk(
     dim: int,
     k: int = 5,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ: the full compressed-ANN composition — coarse inverted lists
     prune WHICH candidates are scored (ivf), PQ/ADC codes decide HOW
@@ -473,59 +468,30 @@ def ivfpq_topk(
     derive from the same scan), candidates hash-join probes on
     centroid_id, the per-query LUT table broadcasts, and top-k is
     WindowGroupLimit."""
-    lists = _nearest_centroids(corpus, centroids, 1, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "centroid_id"
+    lists = _nearest_centroids(corpus, centroids, 1).select(
+        F.col(VEC_ID).alias("neighbor_id"), "centroid_id"
     )
-    codes = pq_encode(corpus, codebook, dim, id_col, vec_col).withColumnRenamed(
-        id_col, "neighbor_id"
-    )
+    codes = pq_encode(corpus, codebook, dim).withColumnRenamed(VEC_ID, "neighbor_id")
     cand = lists.join(codes, "neighbor_id")
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    sub = dim // PQ_M
-    cb = np.asarray(codebook, dtype=np.float64)
-
-    @pandas_udf("array<double>")
-    def lut(vecs: pd.Series) -> pd.Series:
-        Q = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        out = np.empty((Q.shape[0], PQ_M * PQ_K))
-        for m in range(PQ_M):
-            s = Q[:, m * sub:(m + 1) * sub]
-            d2 = np.zeros((Q.shape[0], PQ_K))
-            for d in range(sub):
-                diff = s[:, d:d + 1] - cb[m, :, d][None, :]
-                d2 += diff * diff
-            out[:, m * PQ_K:(m + 1) * PQ_K] = d2
-        return pd.Series(list(out))
-
-    probes = _nearest_centroids(queries, centroids, nprobe, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), "centroid_id"
+    lut = _lut_udf(codebook, dim)
+    probes = _nearest_centroids(queries, centroids, nprobe).select(
+        F.col(VEC_ID).alias("query_id"), "centroid_id"
     )
     qlut = queries.select(
-        F.col(id_col).alias("query_id"), lut(_as_double(F.col(vec_col))).alias("lut")
+        F.col(VEC_ID).alias("query_id"), lut(_as_double(F.col(VEC))).alias("lut")
     )
-    adc = None
-    for m in range(PQ_M):
-        term = F.element_at(
-            F.col("lut"), m * PQ_K + F.element_at(F.col("codes"), m + 1) + 1
-        )
-        adc = term if adc is None else adc + term
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("neighbor_id"))
     return (
         probes.join(cand, "centroid_id")
         .join(F.broadcast(qlut), "query_id")
-        .withColumn("adc_d2", adc)
+        .withColumn("adc_d2", _adc())
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", F.round("adc_d2", 6).alias("adc_d2"))
     )
 
 
-def pq_train(corpus: DataFrame, dim: int, iters: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             seed_codebook=None):
+def pq_train(corpus: DataFrame, dim: int, iters: int = 10):
     """Distributed per-subspace Lloyd training of the PQ codebook.
 
     Returns (codebook (M, K, dim/M) numpy array, per-iteration mean
@@ -534,12 +500,12 @@ def pq_train(corpus: DataFrame, dim: int, iters: int = 10,
     per-(m, c) partial sums + counts (M*K rows per batch — the shuffle
     carries partials, never vectors), a tiny groupBy reduces them, and the
     M*K*sub new centroid values (a few KB) come back to the driver for the
-    next broadcast. Empty cells keep their previous centroid. This is the
+    next broadcast. Empty cells keep their previous centroid; the first
+    codebook is the first PQ_K vectors by id. This is the
     codebook-training half Jégou et al. assume; the fixed-seed codebook in
     the pq_topk driver query exists so the ORACLE stays exact — production
     encoding should train first.
     """
-    import numpy as np
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -550,12 +516,9 @@ def pq_train(corpus: DataFrame, dim: int, iters: int = 10,
     )
 
     sub = dim // PQ_M
-    if seed_codebook is None:
-        first = corpus.orderBy(id_col).limit(PQ_K).select(vec_col).collect()
-        flat = np.array([r[vec_col] for r in first], dtype=np.float64)
-        cb = np.stack([flat[:, m * sub:(m + 1) * sub] for m in range(PQ_M)])
-    else:
-        cb = np.asarray(seed_codebook, dtype=np.float64).copy()
+    first = corpus.orderBy(VEC_ID).limit(PQ_K).select(VEC).collect()
+    flat = np.array([r[VEC] for r in first], dtype=np.float64)
+    cb = np.stack([flat[:, m * sub:(m + 1) * sub] for m in range(PQ_M)])
 
     out_schema = StructType(
         [
@@ -567,13 +530,13 @@ def pq_train(corpus: DataFrame, dim: int, iters: int = 10,
         ]
     )
     history = []
-    vecs_only = corpus.select(vec_col)
+    vecs_only = corpus.select(VEC)
     for _ in range(iters):
         cb_bc = cb  # captured by closure, shipped once per stage
 
         def partials(batches):
             for pdf in batches:
-                M = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+                M = np.array([np.asarray(v, dtype=np.float64) for v in pdf[VEC]])
                 if M.size == 0:
                     continue
                 rows = {"m": [], "c": [], "cnt": [], "err": [], "sums": []}

@@ -22,6 +22,7 @@ from pyspark.sql.types import (
 )
 
 from ..config import python_stage_partitions
+from ..constants import RATE_INTERVAL_NS
 from .station_golden import replay_station
 
 TRANSITION_SCHEMA = StructType(
@@ -101,7 +102,7 @@ def station_lifecycle(
 def detector_summaries(
     events: DataFrame,
     interval: int | None = None,
-    sub_interval: int = 30 * 10**9,
+    sub_interval: int = RATE_INTERVAL_NS,
     cfg=None,
 ) -> DataFrame:
     """A5 snapshot per station per tumbling interval (reference

@@ -42,11 +42,11 @@ from ..constants import (
     MAX_TIMING_ERROR_NS,
     OFFLINE_INTERVAL_S,
     QUIT_INTERVAL_S,
+    RATE_INTERVAL_NS,
     STDDEV_FACTOR,
 )
 
 NS = 1_000_000_000
-RATE_INTERVAL_NS = 30 * NS
 RATE_SLOTS = 10
 
 # status / reason enums (reference include/messages/detectorstatus.h:9-25)

@@ -22,13 +22,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..constants import RATE_INTERVAL_NS
+
 NS = 1_000_000_000
 TIMEBASE_SAMPLE_NS = 2 * NS
 TIMEBASE_MIN_NS = 800_000_000  # 800 ms
 TIMEBASE_MAX_NS = 120 * NS  # 2 min
 TIMEOUT_MIN_NS = 2 * NS
 TIMEOUT_MAX_NS = 30 * 60 * NS
-RATE_INTERVAL_NS = 30 * NS
 RATE_HISTORY = 10
 
 

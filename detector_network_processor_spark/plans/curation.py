@@ -454,7 +454,7 @@ def kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
     )
     for _ in range(_KM_ITERS - 1):
-        assigned = _nearest_centroids(emb, centroids, 1, "vec_id", "embedding")
+        assigned = _nearest_centroids(emb, centroids, 1)
         centroids = (
             assigned.select("centroid_id", F.posexplode("e").alias("i", "x"))
             .groupBy("centroid_id", "i")
@@ -466,7 +466,7 @@ def kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("centroid")
             )
         )
-    final = _nearest_centroids(emb, centroids, 1, "vec_id", "embedding")
+    final = _nearest_centroids(emb, centroids, 1)
     norm = F.sqrt(dot(F.col("centroid"), F.col("centroid")))
     return (
         final.groupBy("centroid_id")

@@ -1424,11 +1424,13 @@ _N_QUERY_VECS = 8
 _TOP_K = 5
 
 
-def _lsh_topk_oracle(dim: int = 64, n_planes: int = 6, n_tables: int = 8) -> str:
+def _lsh_topk_oracle(dim: int = 64) -> str:
     """SQL replication of operators/similarity.py::cosine_topk_lsh — the
     LCG plane matrix (lcg_planes), per-table sign-bit buckets, single-bit
     multiprobe, candidate dedup, exact cosine scoring, per-query top-k."""
+    from ..operators.similarity import LSH_PLANES as n_planes
     from ..operators.similarity import LSH_SEED
+    from ..operators.similarity import LSH_TABLES as n_tables
 
     n_rows = n_tables * n_planes
     probe = ", ".join(f"xor(bucket, {1 << p})" for p in range(n_planes))

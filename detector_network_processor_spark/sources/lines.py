@@ -23,9 +23,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def split_topic_payload(df: DataFrame, topic_col: str = "topic", payload_col: str = "payload") -> DataFrame:
-    t = F.split(F.col(topic_col), "/")
-    c = F.split(F.col(payload_col), " ")
+def split_topic_payload(df: DataFrame) -> DataFrame:
+    t = F.split(F.col("topic"), "/")
+    c = F.split(F.col("payload"), " ")
     out = df.withColumn("_t", t).withColumn("_c", c)
     out = out.filter(
         (F.size("_t") >= 4)
@@ -38,11 +38,11 @@ def split_topic_payload(df: DataFrame, topic_col: str = "topic", payload_col: st
     ).withColumn("hash", F.xxhash64(F.concat_ws("/", "username", "station_id")))
 
 
-def parse_events(df: DataFrame, topic_col: str = "topic", payload_col: str = "payload") -> DataFrame:
+def parse_events(df: DataFrame) -> DataFrame:
     """S2: raw single-hit payloads `start end time_acc ublox fix gnss utc`
     (seconds with 9 decimals). Malformed rows are dropped, exactly like the
     reference's Error path."""
-    base = split_topic_payload(df, topic_col, payload_col).filter(F.size("_c") >= 7)
+    base = split_topic_payload(df).filter(F.size("_c") >= 7)
     f = lambda i: F.col("_c")[i]  # noqa: E731
     # try_cast: malformed numerics become NULL and are filtered — the
     # reference's catch -> Error path (ANSI mode would throw otherwise)

@@ -71,14 +71,14 @@ def stream_kv_assembly(kv: DataFrame, names: list[str]) -> DataFrame:
     )
 
 
-def stream_eav_windows(eav: DataFrame, window: str = "5 seconds", watermark: str = "10 seconds") -> DataFrame:
+def stream_eav_windows(eav: DataFrame) -> DataFrame:
     """eav: streaming (hash long, ts timestamp, name string, value string).
-    Emits one ordered collection per (hash, window) once the watermark
-    closes the window."""
+    Emits one ordered collection per (hash, 5 s window) once the 10 s
+    watermark closes the window."""
     item = F.concat_ws("=", F.col("name"), F.col("value"))
     return (
-        eav.withWatermark("ts", watermark)
-        .groupBy("hash", F.window("ts", window))
+        eav.withWatermark("ts", "10 seconds")
+        .groupBy("hash", F.window("ts", "5 seconds"))
         .agg(
             F.count(F.lit(1)).alias("n_items"),
             F.concat_ws(",", F.sort_array(F.collect_list(item))).alias("items"),

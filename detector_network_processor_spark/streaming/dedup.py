@@ -25,7 +25,18 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..operators.dedup import (
+    DOC_ID,
+    MINHASH_K,
+    TEXT,
+    band_hash_array,
+    band_rows,
+    explode_band_hashes,
+    minhash_signatures,
+)
 from .overlap import run_overlapped
+
+CONTENT_KEY = "content_key"
 
 
 def _index_exists(spark, path: str) -> bool:
@@ -40,9 +51,9 @@ def _index_exists(spark, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def with_content_key(df: DataFrame, text_col: str = "text", key_col: str = "content_key") -> DataFrame:
+def with_content_key(df: DataFrame) -> DataFrame:
     """Attach the 8-byte content digest used as the dedup state key."""
-    return df.withColumn(key_col, F.xxhash64(F.col(text_col)))
+    return df.withColumn(CONTENT_KEY, F.xxhash64(F.col(TEXT)))
 
 
 def stream_dedup_exact(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -75,7 +86,7 @@ def stream_dedup_within_watermark(
 # --------------------------------------------------------------------------
 
 
-def read_band_index(spark, index_path: str, before_batch: int, id_col: str = "doc_id") -> DataFrame:
+def read_band_index(spark, index_path: str, before_batch: int) -> DataFrame:
     """Band rows (id, signature, band, bhash) of every index batch OLDER
     than ``before_batch`` (replay-safe: a re-run of batch N sees the same
     history). Handles BOTH index layouts: the compact r12 form (one row
@@ -83,23 +94,19 @@ def read_band_index(spark, index_path: str, before_batch: int, id_col: str = "do
     pre-r12 exploded form (16 signature-carrying rows per doc) — the
     schema probe is driver-side metadata, so an index written by the
     previous layout keeps working instead of failing its next increment."""
-    return _read_band_index_layout(spark, index_path, before_batch, id_col)[0]
+    return _read_band_index_layout(spark, index_path, before_batch)[0]
 
 
-def _read_band_index_layout(
-    spark, index_path: str, before_batch: int, id_col: str
-) -> tuple[DataFrame, bool]:
+def _read_band_index_layout(spark, index_path: str, before_batch: int) -> tuple[DataFrame, bool]:
     """``read_band_index`` plus whether the index is in the pre-r12
     exploded layout. The schema comes from one file's footer, so an index
     must hold one layout only: an increment appends in the layout found
     here (a mixed index reads one layout's rows as nulls)."""
-    from ..operators.dedup import explode_band_hashes
-
     idx = spark.read.parquet(index_path).filter(F.col("ingest_batch") < before_batch)
     if "bhashes" in idx.columns:
-        return explode_band_hashes(idx, id_col=id_col), False
+        return explode_band_hashes(idx), False
     if "bhash" in idx.columns:  # pre-r12 exploded layout
-        return idx.select(id_col, "signature", "band", "bhash"), True
+        return idx.select(DOC_ID, "signature", "band", "bhash"), True
     raise ValueError(
         f"band index at {index_path!r} has neither a compact 'bhashes' column "
         f"nor exploded 'band'/'bhash' columns (found {idx.columns}) — not a "
@@ -108,10 +115,7 @@ def _read_band_index_layout(
 
 
 def collision_pairs(
-    new_bands: DataFrame,
-    hist_bands: DataFrame | None,
-    threshold: float,
-    id_col: str = "doc_id",
+    new_bands: DataFrame, hist_bands: DataFrame | None, threshold: float
 ) -> DataFrame:
     """ONE collision join per increment (r12; r10 stretch #9 — the pair
     stage was 54% of the replay wall): the left side is the historical
@@ -128,16 +132,14 @@ def collision_pairs(
     exchange moves 8-byte scores for surviving pairs only, never 64-slot
     signature arrays (same narrowing as minhash_lsh_pairs).
 
-    ``new_bands`` / ``hist_bands``: (id_col, signature, band, bhash) rows
+    ``new_bands`` / ``hist_bands``: (doc_id, signature, band, bhash) rows
     (``hist_bands`` None when no history exists yet). Returns
     (doc_a, doc_b, est_jaccard) with est >= threshold, one row per pair."""
-    from ..operators.dedup import MINHASH_K
-
     agree = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
     est = F.round(agree / float(MINHASH_K), 6)
 
     lhs = new_bands.select(
-        F.col(id_col).alias("doc_a"),
+        F.col(DOC_ID).alias("doc_a"),
         F.col("signature").alias("sig_a"),
         "band",
         "bhash",
@@ -145,14 +147,14 @@ def collision_pairs(
     )
     if hist_bands is not None:
         lhs = hist_bands.select(
-            F.col(id_col).alias("doc_a"),
+            F.col(DOC_ID).alias("doc_a"),
             F.col("signature").alias("sig_a"),
             "band",
             "bhash",
             F.lit(True).alias("is_hist"),
         ).unionByName(lhs)
     nb = new_bands.select(
-        F.col(id_col).alias("doc_b"), F.col("signature").alias("sig_b"), "band", "bhash"
+        F.col(DOC_ID).alias("doc_b"), F.col("signature").alias("sig_b"), "band", "bhash"
     )
     keep = F.when(F.col("is_hist"), F.col("doc_a") != F.col("doc_b")).otherwise(
         F.col("doc_a") < F.col("doc_b")
@@ -174,8 +176,6 @@ def process_neardup_increment(
     out_path: str,
     batch_id: int,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     portable: bool = False,
 ) -> None:
     """One increment: signatures for ``batch_docs`` collide against the
@@ -200,26 +200,22 @@ def process_neardup_increment(
     every pair."""
     import os
 
-    from ..operators.dedup import band_hash_array, band_rows, minhash_signatures
-
     sigs = minhash_signatures(
-        batch_docs.select(id_col, text_col), id_col=id_col, text_col=text_col, portable=portable
+        batch_docs.select(DOC_ID, TEXT), portable=portable
     ).localCheckpoint(eager=True)
     # compact form feeds the index WRITE (band rows when the index found
     # below is pre-r12 exploded); the collision join's band rows
     # come from band_rows' inline explode (see its docstring for why the
     # two-step explode-an-aliased-column form is a planning trap)
-    new_compact = sigs.select(
-        id_col, "signature", band_hash_array(portable).alias("bhashes")
-    )
-    new_bands = band_rows(sigs, id_col=id_col, portable=portable)
+    new_compact = sigs.select(DOC_ID, "signature", band_hash_array(portable).alias("bhashes"))
+    new_bands = band_rows(sigs, portable=portable)
 
     hist, exploded = (
-        _read_band_index_layout(spark, index_path, batch_id, id_col)
+        _read_band_index_layout(spark, index_path, batch_id)
         if _index_exists(spark, index_path)
         else (None, False)
     )
-    pairs = collision_pairs(new_bands, hist, threshold, id_col=id_col)
+    pairs = collision_pairs(new_bands, hist, threshold)
 
     # The two terminal writes are INDEPENDENT jobs (pairs needs sigs+hist,
     # the index write only the eagerly-checkpointed sigs), so they run
@@ -254,8 +250,6 @@ def incremental_neardup_query(
     out_path: str,
     checkpoint_dir: str,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ):
     """Wire a streaming document DataFrame into the incremental near-dup
     checker. Returns the unstarted DataStreamWriter."""
@@ -263,8 +257,7 @@ def incremental_neardup_query(
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         process_neardup_increment(
-            spark, batch_df, index_path, out_path, batch_id,
-            threshold=threshold, id_col=id_col, text_col=text_col,
+            spark, batch_df, index_path, out_path, batch_id, threshold=threshold
         )
 
     return docs.writeStream.foreachBatch(fb).option("checkpointLocation", checkpoint_dir)

@@ -41,12 +41,16 @@ redelivers UNCHANGED when a crashed batch re-runs —
   the one read are pruned only after the new one lands. A replay of batch
   N, in the same query or after a restart, therefore re-reads exactly the
   pre-N tail, horizon and rates, and overwrites its output and versions.
+
+The state is listed and written through the driver's local filesystem, so
+a ``state_path`` with a URI scheme is refused before anything is written.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -71,6 +75,14 @@ def _last_start(col: str = "events") -> F.Column:
     """Latest constituent start of a group — the growth horizon of its
     session (new events within ``gap`` of it could still join)."""
     return F.array_max(F.transform(col, lambda e: e["start"]))
+
+
+def _require_local(state_path: str) -> None:
+    if urlparse(state_path).scheme:
+        raise ValueError(
+            f"state_path {state_path!r} has a URI scheme; incremental state must be "
+            "a local filesystem path"
+        )
 
 
 def _state_versions(state_path: str) -> list[int]:
@@ -151,6 +163,7 @@ def process_increment(
     Idempotent under foreachBatch replay (same ``batch_id`` → same input
     state → same overwrites). ``final=True`` flushes everything (end of
     stream) and drops the state."""
+    _require_local(state_path)
     _, gap = resolve_criterion(criterion)
 
     read = _read_version(state_path, batch_id)
@@ -263,6 +276,7 @@ def incremental_cluster_query(
     Returns the (unstarted) DataStreamWriter; call ``.start()``/
     ``.trigger(...)`` as needed, and ``flush_incremental_state`` once the
     stream is done to emit the final open tail."""
+    _require_local(state_path)
     spark = events.sparkSession
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
@@ -281,6 +295,7 @@ def flush_incremental_state(
 ) -> None:
     """End-of-stream flush: cluster whatever the state still holds and
     write those groups as one final output batch directory."""
+    _require_local(state_path)
     versions = _state_versions(state_path)
     if not versions:
         return

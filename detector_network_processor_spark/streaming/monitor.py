@@ -9,9 +9,9 @@ data plane, as a ``StreamingQueryListener``: every micro-batch progress
 event becomes one health row with engine throughput, state-store size and
 driver cpu/mem (``resource.getrusage`` — no psutil in this environment).
 
-Rows buffer on the driver (bounded deque) and optionally flow into a
-user sink callback — the same fan-out-to-sinks role
-sink::collection<cluster_log_t> plays in the reference.
+Rows buffer on the driver in a bounded deque (the newest ``MAX_ROWS``)
+for a sink to read, in place of the reference's
+sink::collection<cluster_log_t> fan-out.
 """
 
 from __future__ import annotations
@@ -19,9 +19,10 @@ from __future__ import annotations
 import json
 import resource
 from collections import deque
-from typing import Callable
 
 from pyspark.sql.streaming import StreamingQueryListener
+
+MAX_ROWS = 10_000
 
 MONITOR_FIELDS = [
     "ts",
@@ -42,9 +43,8 @@ MONITOR_FIELDS = [
 class ClusterLogListener(StreamingQueryListener):
     """A6 analog over Structured Streaming progress events."""
 
-    def __init__(self, sink: Callable[[dict], None] | None = None, max_rows: int = 10_000):
-        self.rows: deque[dict] = deque(maxlen=max_rows)
-        self._sink = sink
+    def __init__(self):
+        self.rows: deque[dict] = deque(maxlen=MAX_ROWS)
 
     # -- StreamingQueryListener contract
     def onQueryStarted(self, event) -> None:  # noqa: N802
@@ -79,5 +79,3 @@ class ClusterLogListener(StreamingQueryListener):
             "mem_rss_kb": ru.ru_maxrss,
         }
         self.rows.append(row)
-        if self._sink is not None:
-            self._sink(row)

@@ -66,7 +66,6 @@ def stream_monitoring_path(
     lines: DataFrame,
     stations: DataFrame,
     interval_ns: int = 120 * 10**9,
-    sub_interval_ns: int = 30 * 10**9,
     output: str = "text",
 ) -> DataFrame:
     """The reference's MONITORING wiring (src/application.cpp:141-176:
@@ -89,7 +88,6 @@ def stream_monitoring_path(
     summaries = stream_detector_summaries(
         events.select("hash", "start", "end", "time_acc", "ublox_counter"),
         interval=interval_ns,
-        sub_interval=sub_interval_ns,
     )
     if output == "summary":
         return summaries

@@ -19,6 +19,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+# the columns the formatters read, fixed by the reference's message fields
+# (include/sink/mqtt.h:98-221, include/sink/database.h:56-190)
+USER = "user"
+STATION_ID = "station_id"
+TS_US = "ts_us"  # event time, µs epoch
+TS_NS = "ts"  # transition time, ns epoch
+NAME = "name"
+VALUE = "value"
+
 
 def l1_text_lines(l1_flat: DataFrame) -> DataFrame:
     """K1: space-separated text lines from the flattened L1 table
@@ -39,12 +48,12 @@ def l1_text_lines(l1_flat: DataFrame) -> DataFrame:
     )
 
 
-def l1_influx_points(l1_flat: DataFrame, measurement: str = "L1Event") -> DataFrame:
+def l1_influx_points(l1_flat: DataFrame) -> DataFrame:
     """K2: InfluxDB line-protocol points, one per constituent, timestamped
     at the constituent start (ns)."""
     return l1_flat.select(
         F.concat(
-            F.lit(f"{measurement},hash="),
+            F.lit("L1Event,hash="),
             F.col("hash"),
             F.lit(" uuid=\""),
             F.col("uuid"),
@@ -62,11 +71,11 @@ def l1_influx_points(l1_flat: DataFrame, measurement: str = "L1Event") -> DataFr
     )
 
 
-def save_histograms(hist: DataFrame, path: str, mode: str = "overwrite") -> None:
+def save_histograms(hist: DataFrame, path: str) -> None:
     """A8: periodic histogram dump — partitioned by pair for selective
     reads; the offline merge job (operators/histogram.merge_histograms)
     reads these back."""
-    hist.write.mode(mode).partitionBy("hash_lo").parquet(path)
+    hist.write.mode("overwrite").partitionBy("hash_lo").parquet(path)
 
 
 # --------------------------------------------------------------------------
@@ -117,8 +126,7 @@ def _num(col, is_int: bool):
     return F.format_string("%.6f", F.coalesce(col.cast("double"), F.lit(0.0)))
 
 
-def summary_text_lines(summary: DataFrame, user_col="user", station_col="station_id",
-                       ts_us_col="ts_us") -> DataFrame:
+def summary_text_lines(summary: DataFrame) -> DataFrame:
     """K1 detector_summary text lines (mqtt.h:128-146): one line per metric,
     '<time> <user> <station> <metric> <value>', in the reference's publish
     order. Returns (hash, win, idx, line); idx = publish position."""
@@ -127,9 +135,9 @@ def summary_text_lines(summary: DataFrame, user_col="user", station_col="station
             F.lit(i).alias("idx"),
             F.concat_ws(
                 " ",
-                _fmt_ts(F.col(ts_us_col)),
-                F.col(user_col),
-                F.col(station_col),
+                _fmt_ts(F.col(TS_US)),
+                F.col(USER),
+                F.col(STATION_ID),
                 F.lit(mq_name),
                 _num(F.col(src), is_int),
             ).alias("line"),
@@ -141,8 +149,7 @@ def summary_text_lines(summary: DataFrame, user_col="user", station_col="station
     ).select("hash", "win", F.col("e.idx").alias("idx"), F.col("e.line").alias("line"))
 
 
-def summary_influx_points(summary: DataFrame, user_col="user", station_col="station_id",
-                          ts_us_col="ts_us") -> DataFrame:
+def summary_influx_points(summary: DataFrame) -> DataFrame:
     """K2 detector_summary line-protocol points (database.h:95-113):
     measurement detector_summary, tags user/detector/site_id, the seven
     fields in reference order, ns timestamp. Returns (hash, win, point)."""
@@ -155,75 +162,69 @@ def summary_influx_points(summary: DataFrame, user_col="user", station_col="stat
         "hash",
         "win",
         F.concat(
-            F.lit("detector_summary,user="), F.col(user_col),
-            F.lit(",detector="), F.col(station_col),
-            F.lit(",site_id="), F.concat(F.col(user_col), F.col(station_col)),
+            F.lit("detector_summary,user="), F.col(USER),
+            F.lit(",detector="), F.col(STATION_ID),
+            F.lit(",site_id="), F.concat(F.col(USER), F.col(STATION_ID)),
             F.lit(" "),
             F.concat_ws(",", *fields),
             F.lit(" "),
-            F.format_string("%d", (F.col(ts_us_col).cast("long") * 1000)),
+            F.format_string("%d", (F.col(TS_US).cast("long") * 1000)),
         ).alias("point"),
     )
 
 
-def trigger_text_lines(transitions: DataFrame, user_col="user", station_col="station_id",
-                       ts_ns_col="ts") -> DataFrame:
+def trigger_text_lines(transitions: DataFrame) -> DataFrame:
     """K1 trigger::detector lines (mqtt.h:188-199): topic 'user/station',
     payload '<time %F_%H-%M-%S %Z> <status> <reason>' (gmtime %Z = 'GMT').
     Returns (hash, ts, topic, line)."""
     return transitions.select(
         "hash",
-        F.col(ts_ns_col).alias("ts"),
-        F.concat_ws("/", F.col(user_col), F.col(station_col)).alias("topic"),
+        F.col(TS_NS).alias("ts"),
+        F.concat_ws("/", F.col(USER), F.col(STATION_ID)).alias("topic"),
         F.concat_ws(
             " ",
             # integer div: float /1000 on ~1e18 ns epochs loses sub-µs bits
-            F.concat(_fmt_ts(F.expr(f"`{ts_ns_col}` div 1000")), F.lit(" GMT")),
+            F.concat(_fmt_ts(F.expr(f"`{TS_NS}` div 1000")), F.lit(" GMT")),
             F.col("status"),
             F.col("reason"),
         ).alias("line"),
     )
 
 
-def trigger_influx_points(transitions: DataFrame, user_col="user", station_col="station_id",
-                          ts_ns_col="ts") -> DataFrame:
+def trigger_influx_points(transitions: DataFrame) -> DataFrame:
     """K2 trigger points (database.h:117-133): measurement trigger, string
     fields type/reason (quoted), ns timestamp."""
     return transitions.select(
         "hash",
-        F.col(ts_ns_col).alias("ts"),
+        F.col(TS_NS).alias("ts"),
         F.concat(
-            F.lit("trigger,user="), F.col(user_col),
-            F.lit(",detector="), F.col(station_col),
-            F.lit(",site_id="), F.concat(F.col(user_col), F.col(station_col)),
+            F.lit("trigger,user="), F.col(USER),
+            F.lit(",detector="), F.col(STATION_ID),
+            F.lit(",site_id="), F.concat(F.col(USER), F.col(STATION_ID)),
             F.lit(' type="'), F.col("status"),
             F.lit('",reason="'), F.col("reason"),
             F.lit('" '),
-            F.format_string("%d", F.col(ts_ns_col).cast("long")),
+            F.format_string("%d", F.col(TS_NS).cast("long")),
         ).alias("point"),
     )
 
 
-def detector_log_text_lines(eav: DataFrame, user_col="user", station_col="station_id",
-                            ts_us_col="ts_us", name_col="name", value_col="value",
-                            unit_col=None) -> DataFrame:
+def detector_log_text_lines(eav: DataFrame) -> DataFrame:
     """K1 detector_log_t lines (mqtt.h:201-221): topic 'user/station',
-    payload '<time> <name> <value>[ <unit>]', one line per EAV item."""
-    parts = [_fmt_ts(F.col(ts_us_col)), F.col(name_col), F.col(value_col)]
-    if unit_col is not None:
-        parts.append(F.col(unit_col))  # concat_ws skips NULL units
+    payload '<time> <name> <value>', one line per EAV item (the reference
+    appends an item's unit; EAV rows carry none)."""
     return eav.select(
-        F.concat_ws("/", F.col(user_col), F.col(station_col)).alias("topic"),
-        F.concat_ws(" ", *parts).alias("line"),
+        F.concat_ws("/", F.col(USER), F.col(STATION_ID)).alias("topic"),
+        F.concat_ws(" ", _fmt_ts(F.col(TS_US)), F.col(NAME), F.col(VALUE)).alias("line"),
     )
 
 
-def _influx_typed_value(value_col):
+def _influx_typed_value():
     """detector_log items are typed Double/Int/String in the reference
     (detectorlog.h item::Type); EAV fixtures carry strings, so type is
     recovered syntactically: pure integer -> 'i' suffix, decimal -> plain
     float, anything else -> quoted string (line-protocol escaping of '"')."""
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
+    v = F.col(VALUE)
     return (
         F.when(v.rlike(r"^-?\d+$"), F.concat(v, F.lit("i")))
         .when(v.rlike(r"^-?\d+\.\d+([eE][+-]?\d+)?$"), v)
@@ -231,22 +232,19 @@ def _influx_typed_value(value_col):
     )
 
 
-def detector_log_influx_points(eav: DataFrame, key_cols: list[str],
-                               user_col="user", station_col="station_id",
-                               ts_us_col="ts_us", name_col="name",
-                               value_col="value") -> DataFrame:
+def detector_log_influx_points(eav: DataFrame, key_cols: list[str]) -> DataFrame:
     """K2 detector_log points (database.h:167-190): ONE point per log
     assembly — all items of a (user, station, window) group become fields of
     a single measurement row (name=value, typed), sorted by name for
     deterministic field order. Aggregation is a plain hash groupBy on the
     log key: partial-aggregated map-side, scale-safe."""
-    item = F.concat(F.col(name_col), F.lit("="), _influx_typed_value(value_col))
+    item = F.concat(F.col(NAME), F.lit("="), _influx_typed_value())
     return (
         eav.groupBy(*key_cols)
         .agg(
-            F.first(F.col(user_col)).alias("_u"),
-            F.first(F.col(station_col)).alias("_s"),
-            F.min(F.col(ts_us_col)).alias("_ts"),
+            F.first(F.col(USER)).alias("_u"),
+            F.first(F.col(STATION_ID)).alias("_s"),
+            F.min(F.col(TS_US)).alias("_ts"),
             F.concat_ws(",", F.sort_array(F.collect_list(item))).alias("_fields"),
         )
         .select(
@@ -277,8 +275,7 @@ CLUSTER_LOG_METRICS = [
 _OUTGOING_SCHEMA = "array<struct<n:int,cnt:bigint>>"
 
 
-def cluster_log_text_lines(clog: DataFrame, ts_us_col="ts_us",
-                           statics: dict | None = None) -> DataFrame:
+def cluster_log_text_lines(clog: DataFrame, statics: dict | None = None) -> DataFrame:
     """K1 cluster_log_t lines (mqtt.h:98-126): '<time> <metric> <value>'
     per metric, plus 'outgoing_<level>' per coincidence level != 1 (the
     reference skips level 1). ``statics`` supplies the host-side fields
@@ -286,12 +283,12 @@ def cluster_log_text_lines(clog: DataFrame, ts_us_col="ts_us",
     the order given. Returns (window, metric, line)."""
     stat_entries = [
         F.struct(F.lit(k).alias("metric"),
-                 F.concat_ws(" ", _fmt_ts(F.col(ts_us_col)), F.lit(k), F.lit(str(v))).alias("line"))
+                 F.concat_ws(" ", _fmt_ts(F.col(TS_US)), F.lit(k), F.lit(str(v))).alias("line"))
         for k, v in (statics or {}).items()
     ]
     metric_entries = [
         F.struct(F.lit(mq).alias("metric"),
-                 F.concat_ws(" ", _fmt_ts(F.col(ts_us_col)), F.lit(mq),
+                 F.concat_ws(" ", _fmt_ts(F.col(TS_US)), F.lit(mq),
                              _num(F.col(src), is_int)).alias("line"))
         for mq, _ix, src, is_int in CLUSTER_LOG_METRICS
     ]
@@ -301,7 +298,7 @@ def cluster_log_text_lines(clog: DataFrame, ts_us_col="ts_us",
         lambda o: F.struct(
             F.concat(F.lit("outgoing_"), o["n"].cast("string")).alias("metric"),
             F.concat_ws(
-                " ", _fmt_ts(F.col(ts_us_col)),
+                " ", _fmt_ts(F.col(TS_US)),
                 F.concat(F.lit("outgoing_"), o["n"].cast("string")),
                 F.format_string("%d", o["cnt"]),
             ).alias("line"),
@@ -315,7 +312,7 @@ def cluster_log_text_lines(clog: DataFrame, ts_us_col="ts_us",
 
 
 def cluster_log_influx_points(clog: DataFrame, cluster_id: str = "cluster",
-                              ts_us_col="ts_us", statics: dict | None = None) -> DataFrame:
+                              statics: dict | None = None) -> DataFrame:
     """K2 cluster_summary points (database.h:56-92): measurement
     cluster_summary, tag cluster_id, dynamic fields + outgoing<level> per
     level != 1 + their total as 'outgoing' (level 1 excluded from the sum,
@@ -352,6 +349,6 @@ def cluster_log_influx_points(clog: DataFrame, cluster_id: str = "cluster",
                         F.when(F.size(lvl) > 0, outgoing_fields),
                         F.concat(F.lit("outgoing="), F.format_string("%d", total), F.lit("i"))),
             F.lit(" "),
-            F.format_string("%d", F.col(ts_us_col).cast("long") * 1000),
+            F.format_string("%d", F.col(TS_US).cast("long") * 1000),
         ).alias("point"),
     )

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..constants import RATE_INTERVAL_NS
 from ..operators.station import TRANSITION_SCHEMA
 from ..operators.station_golden import replay_records, state_from_row, state_to_row
 
@@ -135,8 +136,8 @@ def _round6(x: float) -> float:
     return float(Decimal(x).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
 
 
-def _summary_update_factory(interval: int, sub_interval: int):
-    n_sub = interval // sub_interval
+def _summary_update_factory(interval: int):
+    n_sub = interval // RATE_INTERVAL_NS
 
     def close(hash_, win, inc, prog, pulse_sum, pulse_n, acc_sum, subs):
         deadtime = 1.0 if prog == 0 else _round6(1.0 - inc / prog)
@@ -189,7 +190,7 @@ def _summary_update_factory(interval: int, sub_interval: int):
                     pulse_sum += pulse
                     pulse_n += 1
                 acc_sum += time_acc
-                sub = start // sub_interval
+                sub = start // RATE_INTERVAL_NS
                 subs[sub] = subs.get(sub, 0) + 1
         state.update(
             (
@@ -210,9 +211,7 @@ def _summary_update_factory(interval: int, sub_interval: int):
     return update
 
 
-def stream_detector_summaries(
-    events: DataFrame, interval: int = 120 * 10**9, sub_interval: int = 30 * 10**9
-) -> DataFrame:
+def stream_detector_summaries(events: DataFrame, interval: int = 120 * 10**9) -> DataFrame:
     """Streaming A5: events (hash, start, end, time_acc, ublox_counter) ->
     append-mode summary stream with the batch operator's exact columns and
     arithmetic (integer accumulators; Spark-HALF_UP rounding). State per
@@ -220,7 +219,7 @@ def stream_detector_summaries(
     return events.select("hash", "start", "end", "time_acc", "ublox_counter").groupBy(
         "hash"
     ).applyInPandasWithState(
-        _summary_update_factory(interval, sub_interval),
+        _summary_update_factory(interval),
         outputStructType=SUMMARY_OUT_SCHEMA,
         stateStructType=SUMMARY_STATE_SCHEMA,
         outputMode="append",

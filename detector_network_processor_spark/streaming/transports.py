@@ -268,8 +268,12 @@ class InfluxWriter:
         return body.count(b"\n") + 1
 
 
-def mqtt_foreach_batch(publisher: MqttPublisher, topic: str, column: str = "line", qos: int = 0):
-    """foreachBatch callback: drain a formatted-line DataFrame to MQTT.
+_INFLUX_CHUNK = 5000  # lines per line-protocol POST
+
+
+def mqtt_foreach_batch(publisher: MqttPublisher, topic: str, qos: int = 0):
+    """foreachBatch callback: drain a formatted-line DataFrame (a ``line``
+    column) to MQTT.
 
     Rows stream through ``toLocalIterator`` (one partition in driver memory
     at a time) instead of ``collect`` — an unbounded L1 stream routed here
@@ -278,24 +282,25 @@ def mqtt_foreach_batch(publisher: MqttPublisher, topic: str, column: str = "line
     def handle(batch_df, batch_id: int) -> None:
         publisher.publish_lines(
             topic,
-            (r[column] for r in batch_df.select(column).toLocalIterator(prefetchPartitions=True)),
+            (r["line"] for r in batch_df.select("line").toLocalIterator(prefetchPartitions=True)),
             qos=qos,
         )
 
     return handle
 
 
-def influx_foreach_batch(writer: InfluxWriter, column: str = "point", chunk_size: int = 5000):
-    """foreachBatch callback: drain formatted points to InfluxDB.
+def influx_foreach_batch(writer: InfluxWriter):
+    """foreachBatch callback: drain formatted points (a ``point`` column)
+    to InfluxDB.
 
-    Streams via ``toLocalIterator`` and POSTs in ``chunk_size``-line bodies,
+    Streams via ``toLocalIterator`` and POSTs in ``_INFLUX_CHUNK``-line bodies,
     bounding driver memory AND request size regardless of batch volume."""
 
     def handle(batch_df, batch_id: int) -> None:
         chunk: list[str] = []
-        for r in batch_df.select(column).toLocalIterator(prefetchPartitions=True):
-            chunk.append(r[column])
-            if len(chunk) >= chunk_size:
+        for r in batch_df.select("point").toLocalIterator(prefetchPartitions=True):
+            chunk.append(r["point"])
+            if len(chunk) >= _INFLUX_CHUNK:
                 writer.write_lines(chunk)
                 chunk = []
         if chunk:

@@ -218,6 +218,70 @@ def test_monitor_interval_ns_is_checked_when_parsed():
             p.parse_args(argv + ["--interval-ns", bad])
 
 
+# the required arguments of each command that takes --cpus
+_CPUS_COMMANDS = {
+    "run": ["run", "q"],
+    "stream": [a.format(tmp="t") for a in STREAM_ARGS],
+    "monitor": ["monitor", "--lines-dir", "l", "--stations-parquet", "s", "--out", "o",
+                "--checkpoint", "c"],
+    "ingest": ["ingest", "--docs-dir", "d", "--index", "i", "--out", "o", "--checkpoint", "c"],
+    "materialize": ["materialize", "--out", "o"],
+    "compact": ["compact", "--in", "i", "--out", "o"],
+    "verify": ["verify"],
+}
+
+
+def test_jaccard_thresholds_are_checked_when_parsed():
+    """ingest --threshold and compact --jaccard take a number from 0 to 1:
+    Spark orders NaN above every number, so `est_jaccard >= NaN` keeps no
+    pair, and any threshold past 1 keeps none either."""
+    import pytest
+
+    from detector_network_processor_spark.__main__ import _build_parser
+
+    p = _build_parser()
+    for cmd, opt, dest in (("ingest", "--threshold", "threshold"),
+                           ("compact", "--jaccard", "jaccard")):
+        argv = _CPUS_COMMANDS[cmd]
+        assert getattr(p.parse_args(argv), dest) == 0.5
+        assert getattr(p.parse_args(argv + [opt, "0"]), dest) == 0.0
+        assert getattr(p.parse_args(argv + [opt, "1"]), dest) == 1.0
+        for bad in ("nan", "inf", "-inf", "-0.1", "1.01", "half"):
+            with pytest.raises(SystemExit):
+                p.parse_args(argv + [opt, bad])
+
+
+def test_cpus_is_checked_when_parsed():
+    """--cpus is a positive whole number on every command that takes it:
+    `local[abc]` and `local[0]` fail only once SparkContext creation
+    starts."""
+    import pytest
+
+    from detector_network_processor_spark.__main__ import _build_parser
+
+    p = _build_parser()
+    for argv in _CPUS_COMMANDS.values():
+        assert p.parse_args(argv).cpus is None
+        assert p.parse_args(argv + ["--cpus", "3"]).cpus == 3
+        for bad in ("abc", "0", "-2", "1.5"):
+            with pytest.raises(SystemExit):
+                p.parse_args(argv + ["--cpus", bad])
+
+
+def test_materialize_buckets_is_checked_when_parsed():
+    import pytest
+
+    from detector_network_processor_spark.__main__ import _build_parser
+
+    p = _build_parser()
+    argv = _CPUS_COMMANDS["materialize"]
+    assert p.parse_args(argv).buckets is None
+    assert p.parse_args(argv + ["--buckets", "8"]).buckets == 8
+    for bad in ("0", "-8", "eight"):
+        with pytest.raises(SystemExit):
+            p.parse_args(argv + ["--buckets", bad])
+
+
 def test_stream_daemon_drains_spool(spark):
     """stream --available-now lands exactly the batch L1 rows of the same
     parsed and gated lines, on a query started with one state partition,

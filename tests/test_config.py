@@ -159,6 +159,42 @@ def test_entry_point_parameters_are_pinned():
     assert params(flush_incremental_state) == ["spark", "state_path", "out_path", "criterion"]
 
 
+def test_ingest_entry_point_parameters_are_pinned():
+    """The near-dup ingest chain and the line parser take no column names
+    or tuning values beyond the ones a caller sets: a new knob on any of
+    them needs an edit to this test."""
+    import inspect
+
+    from detector_network_processor_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures,
+    )
+    from detector_network_processor_spark.sources.lines import parse_events
+    from detector_network_processor_spark.streaming.dedup import (
+        collision_pairs,
+        incremental_neardup_query,
+        process_neardup_increment,
+        read_band_index,
+    )
+    from detector_network_processor_spark.streaming.pipeline import stream_monitoring_path
+
+    def params(fn):
+        return list(inspect.signature(fn).parameters)
+
+    assert params(incremental_neardup_query) == [
+        "docs", "index_path", "out_path", "checkpoint_dir", "threshold",
+    ]
+    assert params(process_neardup_increment) == [
+        "spark", "batch_docs", "index_path", "out_path", "batch_id", "threshold", "portable",
+    ]
+    assert params(read_band_index) == ["spark", "index_path", "before_batch"]
+    assert params(collision_pairs) == ["new_bands", "hist_bands", "threshold"]
+    assert params(minhash_signatures) == ["docs", "portable"]
+    assert params(minhash_lsh_pairs) == ["signatures", "portable", "min_est"]
+    assert params(parse_events) == ["df"]
+    assert params(stream_monitoring_path) == ["lines", "stations", "interval_ns", "output"]
+
+
 def test_interval_changes_detector_summary(spark):
     """A non-default detectorsummary interval must change the windowing of
     detector_summaries (the verdict's wiring criterion)."""

@@ -115,14 +115,12 @@ def test_minhash_min_est_equals_filter_after(spark):
     sigs = minhash_signatures(docs, portable=True).localCheckpoint(eager=True)
     after = {
         (r.doc_a, r.doc_b): r.est_jaccard
-        for r in minhash_lsh_pairs(sigs, portable=True, materialized=True).collect()
+        for r in minhash_lsh_pairs(sigs, portable=True).collect()
         if r.est_jaccard >= 0.34
     }
     pushed = {
         (r.doc_a, r.doc_b): r.est_jaccard
-        for r in minhash_lsh_pairs(
-            sigs, portable=True, materialized=True, min_est=0.34
-        ).collect()
+        for r in minhash_lsh_pairs(sigs, portable=True, min_est=0.34).collect()
     }
     assert pushed == after and pushed, f"{len(pushed)} vs {len(after)} pairs"
 

@@ -195,12 +195,13 @@ def test_pair_uptime_property_vs_bruteforce(spark):
 
 def test_load_histograms_across_schema_vintages(spark, tmp_path):
     """A8 store compatibility: pre-meta saves (no uptime/sample_time) and
-    post-meta saves read back as ONE frame with meta backfilled to 0, and
+    post-meta saves, both written by save_histograms, read back as ONE frame with meta backfilled to 0, and
     merge_histograms_meta sums correctly across the vintages."""
     from detector_network_processor_spark.operators.histogram import (
         load_histograms,
         merge_histograms_meta,
     )
+    from detector_network_processor_spark.streaming.sinks import save_histograms
 
     old = spark.createDataFrame(
         [(1, 2, 10.0, 5, 100, 7)],
@@ -211,8 +212,8 @@ def test_load_histograms_across_schema_vintages(spark, tmp_path):
         "hash_lo long, hash_hi long, distance double, bin_width int, bin long, n long, "
         "uptime long, sample_time long",
     )
-    old.write.partitionBy("hash_lo").parquet(str(tmp_path / "h" / "v_old"))
-    new.write.partitionBy("hash_lo").parquet(str(tmp_path / "h" / "v_new"))
+    save_histograms(old, str(tmp_path / "h" / "v_old"))
+    save_histograms(new, str(tmp_path / "h" / "v_new"))
 
     a = load_histograms(spark, str(tmp_path / "h" / "v_old"))
     b = load_histograms(spark, str(tmp_path / "h" / "v_new"))

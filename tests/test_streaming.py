@@ -689,6 +689,43 @@ def test_increment_overlapped_write_failure_propagates(spark, monkeypatch):
             shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_incremental_state_path_must_be_local(spark):
+    """The incremental state is listed and its horizon written through the
+    driver's local filesystem, so a state_path with a URI scheme is refused
+    before anything is written: with one, no increment would find its
+    tail, and the first horizon write would fail after the output landed."""
+    import os
+    import tempfile
+
+    import pytest
+
+    from detector_network_processor_spark.streaming.incremental import (
+        flush_incremental_state,
+        incremental_cluster_query,
+        process_increment,
+    )
+
+    events = make_events(n_base=50, seed=61)
+    stations = {s[0]: s for s in STATIONS}
+    batch = spark.createDataFrame([
+        {**e, "lat": stations[e["hash"]][1], "lon": stations[e["hash"]][2], "h": stations[e["hash"]][3]}
+        for e in events
+    ])
+    tmp = tempfile.mkdtemp(prefix="dnp_incuri_")
+    try:
+        out_path, state_uri = f"{tmp}/out", f"file://{tmp}/state"
+        with pytest.raises(ValueError, match="URI scheme"):
+            process_increment(spark, batch, state_uri, out_path, batch_id=0)
+        assert not os.path.exists(out_path) and not os.path.exists(f"{tmp}/state")
+        with pytest.raises(ValueError, match="URI scheme"):
+            incremental_cluster_query(batch, out_path, "hdfs://nn/state", f"{tmp}/ckpt")
+        with pytest.raises(ValueError, match="URI scheme"):
+            flush_incremental_state(spark, state_uri, out_path)
+        assert os.listdir(tmp) == []
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_stream_coincidence_rocksdb_state_store(spark):
     """The session-window clustering path must produce identical results
     under the RocksDB state store (the production backend for large
