@@ -186,8 +186,8 @@ def band_hash_array(portable: bool = False):
 
 def band_rows(signatures: DataFrame, portable: bool = False) -> DataFrame:
     """Explode signatures into LSH band rows (id, signature, band, bhash)
-    — the join key-space for bucket collision, shared by the batch
-    self-join and the incremental dedup-against-index path.
+    — the join key-space for bucket collision in the batch self-join and
+    the star edges.
 
     The posexplode argument is INLINE in a single select, never an
     aliased column from a separate projection: over a live (un-pinned)
@@ -205,8 +205,8 @@ def band_rows(signatures: DataFrame, portable: bool = False) -> DataFrame:
 def explode_band_hashes(compact: DataFrame) -> DataFrame:
     """(id, signature, bhashes array) -> (id, signature, band, bhash):
     the codegen-cheap reconstruction of band rows from the COMPACT form.
-    For STORED indexes only (the bhashes column is a real parquet
-    column, so the Generate-inferred size filter is a cheap scan-level
+    For stored or checkpointed compact rows only (the bhashes column is
+    materialized, so the Generate-inferred size filter is a cheap
     predicate); live plans use band_rows — see its docstring for the
     UDF-duplication trap this split avoids."""
     return compact.select(DOC_ID, "signature", F.posexplode("bhashes").alias("band", "bhash"))

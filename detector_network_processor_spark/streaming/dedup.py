@@ -24,13 +24,13 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from ..operators.dedup import (
     DOC_ID,
     MINHASH_K,
     TEXT,
     band_hash_array,
-    band_rows,
     explode_band_hashes,
     minhash_signatures,
 )
@@ -86,32 +86,57 @@ def stream_dedup_within_watermark(
 # --------------------------------------------------------------------------
 
 
+def _compact_signatures(docs: DataFrame, portable: bool = False) -> DataFrame:
+    """(id, signature, bhashes): one row per document with its MinHash
+    signature and LSH_BANDS band hashes, the index's compact layout. A pure
+    projection over the documents, so a streaming query analyses it once
+    and every trigger only re-optimises it; the ``bhashes`` projection
+    reuses the signature column (one ArrowEvalPython, test-pinned)."""
+    sigs = minhash_signatures(docs.select(DOC_ID, TEXT), portable=portable)
+    return sigs.select(DOC_ID, "signature", band_hash_array(portable).alias("bhashes"))
+
+
 def read_band_index(spark, index_path: str, before_batch: int) -> DataFrame:
     """Band rows (id, signature, band, bhash) of every index batch OLDER
     than ``before_batch`` (replay-safe: a re-run of batch N sees the same
     history). Handles BOTH index layouts: the compact r12 form (one row
     per doc, ``bhashes`` array — reconstructed by one posexplode) and the
     pre-r12 exploded form (16 signature-carrying rows per doc) — the
-    schema probe is driver-side metadata, so an index written by the
-    previous layout keeps working instead of failing its next increment."""
-    return _read_band_index_layout(spark, index_path, before_batch)[0]
+    layout is told apart by the index's schema (``_index_layout``), so an
+    index written by the previous layout keeps working instead of failing
+    its next increment."""
+    return _history(spark, index_path, before_batch, _index_layout(spark, index_path))
 
 
-def _read_band_index_layout(spark, index_path: str, before_batch: int) -> tuple[DataFrame, bool]:
-    """``read_band_index`` plus whether the index is in the pre-r12
-    exploded layout. The schema comes from one file's footer, so an index
-    must hold one layout only: an increment appends in the layout found
-    here (a mixed index reads one layout's rows as nulls)."""
-    idx = spark.read.parquet(index_path).filter(F.col("ingest_batch") < before_batch)
-    if "bhashes" in idx.columns:
-        return explode_band_hashes(idx), False
-    if "bhash" in idx.columns:  # pre-r12 exploded layout
-        return idx.select(DOC_ID, "signature", "band", "bhash"), True
+def _index_layout(spark, index_path: str) -> tuple[StructType, bool]:
+    """The index's schema and whether it is in the pre-r12 exploded
+    layout. The schema comes from one file's footer (one Spark job), so an
+    index must hold one layout only: an increment appends in the layout
+    found here (a mixed index reads one layout's rows as nulls)."""
+    schema = spark.read.parquet(index_path).schema
+    if "bhashes" in schema.names:
+        return schema, False
+    if "bhash" in schema.names:  # pre-r12 exploded layout
+        return schema, True
     raise ValueError(
         f"band index at {index_path!r} has neither a compact 'bhashes' column "
-        f"nor exploded 'band'/'bhash' columns (found {idx.columns}) — not a "
+        f"nor exploded 'band'/'bhash' columns (found {schema.names}) — not a "
         "near-dup band index"
     )
+
+
+def _history(
+    spark, index_path: str, before_batch: int, layout: tuple[StructType, bool]
+) -> DataFrame:
+    """``read_band_index`` for a known ``_index_layout``: the schema is
+    given to the reader, so no footer is read to infer it."""
+    schema, exploded = layout
+    idx = spark.read.schema(schema).parquet(index_path).filter(
+        F.col("ingest_batch") < before_batch
+    )
+    if exploded:
+        return idx.select(DOC_ID, "signature", "band", "bhash")
+    return explode_band_hashes(idx)
 
 
 def collision_pairs(
@@ -169,58 +194,37 @@ def collision_pairs(
     )
 
 
-def process_neardup_increment(
+def _increment(
     spark,
-    batch_docs: DataFrame,
+    compact: DataFrame,
     index_path: str,
     out_path: str,
     batch_id: int,
-    threshold: float = 0.5,
-    portable: bool = False,
-) -> None:
-    """One increment: signatures for ``batch_docs`` collide against the
-    historical band index AND against each other; pairs with estimated
-    Jaccard >= ``threshold`` land in ``out_path/batch_id=N`` and the new
-    band rows are appended as ``index_path/ingest_batch=N``, in the layout
-    the index already holds. Replays of a batch_id overwrite (not
-    duplicate) both directories.
+    threshold: float,
+    layout: tuple[StructType, bool] | None,
+) -> tuple[StructType, bool] | None:
+    """The increment core shared by ``process_neardup_increment`` and the
+    streaming callback. ``compact`` holds the batch's checkpointed
+    (id, signature, bhashes) rows; ``layout`` is the index's
+    ``_index_layout`` from an earlier increment of the same caller, or
+    None to probe the index here. Returns the layout for the next
+    increment (None while no index exists).
 
-    The collision work is ONE join per increment (``collision_pairs`` —
-    plan rationale there), over a COMPACT band index: one row per doc
-    carrying the signature plus its LSH_BANDS band hashes (r12). The
-    exploded 16-rows-per-doc form stored every 64-slot signature 16x
-    over; measured honestly, parquet's dictionary/RLE encoding already
-    collapses most of that repetition ON DISK (1.22x bytes at sf0.1 —
-    SCALING.md r12), so the compact layout's win is the 16x fewer index
-    rows to write, scan, and decode per history read, not raw bytes; the
-    explode to join-key rows is a codegen-cheap posexplode at use time
-    (``read_band_index``, which also still reads the pre-r12 exploded
-    layout). Replay wall A/B (old two-join + exploded index vs this),
-    interleaved min-of-4 at sf0.1: 5.75 -> 5.20 s, new side faster in
-    every pair."""
+    Reusing the layout is safe because every increment appends in the
+    layout the index already holds, so the schema cannot change under a
+    caller once an index exists."""
     import os
 
-    sigs = minhash_signatures(
-        batch_docs.select(DOC_ID, TEXT), portable=portable
-    ).localCheckpoint(eager=True)
-    # compact form feeds the index WRITE (band rows when the index found
-    # below is pre-r12 exploded); the collision join's band rows
-    # come from band_rows' inline explode (see its docstring for why the
-    # two-step explode-an-aliased-column form is a planning trap)
-    new_compact = sigs.select(DOC_ID, "signature", band_hash_array(portable).alias("bhashes"))
-    new_bands = band_rows(sigs, portable=portable)
-
-    hist, exploded = (
-        _read_band_index_layout(spark, index_path, batch_id)
-        if _index_exists(spark, index_path)
-        else (None, False)
-    )
+    if layout is None and _index_exists(spark, index_path):
+        layout = _index_layout(spark, index_path)
+    new_bands = explode_band_hashes(compact)
+    hist = _history(spark, index_path, batch_id, layout) if layout else None
     pairs = collision_pairs(new_bands, hist, threshold)
 
-    # The two terminal writes are INDEPENDENT jobs (pairs needs sigs+hist,
-    # the index write only the eagerly-checkpointed sigs), so they run
-    # overlapped: the short index write back-fills executor slots freed by
-    # the pair join's straggler tail instead of paying its whole wall
+    # The two terminal writes are INDEPENDENT jobs (pairs needs the new rows
+    # and the history, the index write only the checkpointed rows), so they
+    # run overlapped: the short index write back-fills executor slots freed
+    # by the pair join's straggler tail instead of paying its whole wall
     # serially after it (guide §2.6 overlap of independent jobs; measured
     # A/B in OPTIMIZATION_r12.md, -12.5%). run_overlapped (r13) joins both
     # futures FAIL-FAST — the first failure cancels the sibling's job group
@@ -237,11 +241,49 @@ def process_neardup_increment(
     def _write_index() -> None:
         # the ingest_batch column comes from the partition DIRECTORY name at
         # read time — writing it into the files too would collide on discovery
-        (new_bands if exploded else new_compact).write.mode("overwrite").parquet(
+        exploded = layout is not None and layout[1]
+        (new_bands if exploded else compact).write.mode("overwrite").parquet(
             os.path.join(index_path, f"ingest_batch={batch_id}")
         )
 
     run_overlapped(spark, {"pairs": _write_pairs, "index": _write_index})
+    return layout
+
+
+def process_neardup_increment(
+    spark,
+    batch_docs: DataFrame,
+    index_path: str,
+    out_path: str,
+    batch_id: int,
+    threshold: float = 0.5,
+    portable: bool = False,
+) -> None:
+    """One increment: signatures for ``batch_docs`` collide against the
+    historical band index AND against each other; pairs with estimated
+    Jaccard >= ``threshold`` land in ``out_path/batch_id=N`` and the new
+    band rows are appended as ``index_path/ingest_batch=N``, in the layout
+    the index already holds. Replays of a batch_id overwrite (not
+    duplicate) both directories. Each call probes the index afresh; the
+    streaming query (``incremental_neardup_query``) runs the same core
+    with the signatures planned once per query.
+
+    The collision work is ONE join per increment (``collision_pairs`` —
+    plan rationale there), over a COMPACT band index: one row per doc
+    carrying the signature plus its LSH_BANDS band hashes (r12). The
+    exploded 16-rows-per-doc form stored every 64-slot signature 16x
+    over; measured honestly, parquet's dictionary/RLE encoding already
+    collapses most of that repetition ON DISK (1.22x bytes at sf0.1 —
+    SCALING.md r12), so the compact layout's win is the 16x fewer index
+    rows to write, scan, and decode per history read, not raw bytes; the
+    explode to join-key rows is a codegen-cheap posexplode of the
+    checkpointed (or stored) ``bhashes`` column at use time. Replay wall
+    A/B (old two-join + exploded index vs this), interleaved min-of-4 at
+    sf0.1: 5.75 -> 5.20 s, new side faster in every pair."""
+    # eager: the checkpoint feeds both writes, and a lazy one can be raced
+    # into duplicate computation by the two concurrent jobs
+    compact = _compact_signatures(batch_docs, portable).localCheckpoint(eager=True)
+    _increment(spark, compact, index_path, out_path, batch_id, threshold, None)
 
 
 def incremental_neardup_query(
@@ -252,12 +294,26 @@ def incremental_neardup_query(
     threshold: float = 0.5,
 ):
     """Wire a streaming document DataFrame into the incremental near-dup
-    checker. Returns the unstarted DataStreamWriter."""
+    checker. Returns the unstarted DataStreamWriter.
+
+    The signatures and band hashes are part of the streaming plan, so the
+    query analyses them once and each trigger hands the callback compact
+    (id, signature, bhashes) rows. The callback checkpoints them and runs
+    the increment core; the index layout resolved by the first trigger
+    that finds an index is reused by every later one, so their history
+    reads infer no schema."""
     spark = docs.sparkSession
+    layout = None
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
-        process_neardup_increment(
-            spark, batch_df, index_path, out_path, batch_id, threshold=threshold
+        nonlocal layout
+        layout = _increment(
+            spark, batch_df.localCheckpoint(eager=True), index_path, out_path, batch_id,
+            threshold, layout,
         )
 
-    return docs.writeStream.foreachBatch(fb).option("checkpointLocation", checkpoint_dir)
+    return (
+        _compact_signatures(docs)
+        .writeStream.foreachBatch(fb)
+        .option("checkpointLocation", checkpoint_dir)
+    )

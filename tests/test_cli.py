@@ -8,9 +8,12 @@ import shutil
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
 
 from detector_network_processor_spark.__main__ import main
 from detector_network_processor_spark.session import get_spark
+
+ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def test_list_names_every_registered_query(capsys):
@@ -357,7 +360,7 @@ def test_module_invocation_smoke():
     """python -m ... list works as a real subprocess (no Spark needed)."""
     r = subprocess.run(
         [sys.executable, "-m", "detector_network_processor_spark", "list"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=ROOT, timeout=120,
     )
     assert r.returncode == 0
     assert "l1_coincidence" in r.stdout
@@ -476,7 +479,7 @@ def test_cli_monitor_drains_spool(spark, tmp_path):
          "--stations-parquet", str(tmp_path / "stations"),
          "--out", str(tmp_path / "out"), "--checkpoint", str(tmp_path / "ckpt"),
          "--available-now", "--cpus", "4"],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo",
+        capture_output=True, text=True, timeout=600, cwd=ROOT,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     out = spark.read.parquet(str(tmp_path / "out"))
@@ -505,7 +508,7 @@ def test_cli_ingest_builds_index_and_finds_pairs(spark, tmp_path):
          "--docs-dir", str(tmp_path / "spool" / "*"),
          "--index", str(tmp_path / "index"), "--out", str(tmp_path / "out"),
          "--checkpoint", str(tmp_path / "ckpt"), "--available-now", "--cpus", "4"],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo",
+        capture_output=True, text=True, timeout=600, cwd=ROOT,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     pairs = spark.read.parquet(str(tmp_path / "out")).collect()

@@ -7,6 +7,7 @@ import shutil
 import tempfile
 
 import pyspark.sql.functions as F
+import pytest
 
 from detector_network_processor_spark.streaming.dedup import (
     stream_dedup_exact,
@@ -147,6 +148,21 @@ def test_stream_curation_pipeline_matches_batch(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _neardup_corpus() -> list[tuple[int, str]]:
+    """30 documents: a base sentence, near-dups of it (one token swapped)
+    and unrelated token runs, interleaved by doc_id."""
+    base = "the quick brown fox jumps over the lazy dog and runs far away tonight"
+    docs = []
+    for i in range(30):
+        words = base.split()
+        if i % 3 == 1:
+            words[i % len(words)] = f"tok{i}"  # near-dup of base
+        if i % 3 == 2:
+            words = [f"w{i}_{j}" for j in range(14)]  # unrelated
+        docs.append((i, " ".join(words)))
+    return docs
+
+
 def test_incremental_neardup_index_matches_batch(spark):
     """Streaming dedup-against-index == batch minhash_lsh_pairs over the
     union of all ingested batches (>= threshold), including pairs whose
@@ -161,15 +177,7 @@ def test_incremental_neardup_index_matches_batch(spark):
     )
     from detector_network_processor_spark.streaming.dedup import process_neardup_increment
 
-    base = "the quick brown fox jumps over the lazy dog and runs far away tonight"
-    docs = []
-    for i in range(30):
-        words = base.split()
-        if i % 3 == 1:
-            words[i % len(words)] = f"tok{i}"  # near-dup of base
-        if i % 3 == 2:
-            words = [f"w{i}_{j}" for j in range(14)]  # unrelated
-        docs.append((i, " ".join(words)))
+    docs = _neardup_corpus()
     df = spark.createDataFrame(docs, "doc_id long, text string")
 
     THRESH = 0.5
@@ -313,6 +321,120 @@ def test_pre_r12_exploded_index_keeps_one_layout_across_increments(spark):
         for batch_id in (1, 2):
             cols = spark.read.parquet(f"{tmp}/index/ingest_batch={batch_id}").columns
             assert sorted(cols) == ["band", "bhash", "doc_id", "signature"], cols
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _run_ingest_query(spark, tmp, chunks, index):
+    """Write each chunk of (doc_id, text) rows as one spool file and run
+    the ingest query over them, one file per trigger; returns the
+    normalised (doc_a, doc_b, est_jaccard) pairs of every batch and the
+    last micro-batch's physical plan."""
+    from detector_network_processor_spark.streaming.dedup import incremental_neardup_query
+
+    schema = "doc_id long, text string"
+    for i, chunk in enumerate(chunks):
+        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(f"{tmp}/in/f{i}")
+    docs = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{tmp}/in/f*")
+    q = (
+        incremental_neardup_query(docs, index, f"{tmp}/out", f"{tmp}/ckpt", threshold=0.5)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None, q.exception()
+    assert q.lastProgress["batchId"] == len(chunks) - 1
+    pairs = {
+        (min(r.doc_a, r.doc_b), max(r.doc_a, r.doc_b), r.est_jaccard)
+        for r in spark.read.parquet(f"{tmp}/out").collect()
+    }
+    # the physical plan of the last micro-batch: the one the callback
+    # checkpoints (a foreachBatch DataFrame scans that plan's RDD)
+    return pairs, q._jsq.explainInternal(False)
+
+
+def test_ingest_query_plans_the_increment_once_per_query(spark, monkeypatch):
+    """The ingest query over three triggers finds the one-shot
+    minhash_lsh_pairs at the threshold, scores included. Its signatures
+    are planned once per query, not once per trigger; the index schema is
+    inferred at most once, by the first trigger that finds an index; and
+    the checkpointed micro-batch plan evaluates the signature UDF once, so
+    the bhashes projection does not duplicate it."""
+    from detector_network_processor_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures,
+    )
+    from detector_network_processor_spark.streaming import dedup
+
+    calls = {"minhash_signatures": 0, "_index_layout": 0}
+
+    def counted(name):
+        real = getattr(dedup, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(dedup, name, wrapper)
+
+    counted("minhash_signatures")
+    counted("_index_layout")
+
+    docs = _neardup_corpus()
+    want = {
+        (r.doc_a, r.doc_b, r.est_jaccard)
+        for r in minhash_lsh_pairs(
+            minhash_signatures(spark.createDataFrame(docs, "doc_id long, text string")),
+            min_est=0.5,
+        ).collect()
+    }
+    assert want, "fixture produced no near-dup pairs"
+    tmp = tempfile.mkdtemp(prefix="dnp_ingestq_")
+    try:
+        got, plan = _run_ingest_query(
+            spark, tmp, [docs[:10], docs[10:20], docs[20:]], f"{tmp}/index"
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+    assert got == want
+    assert calls == {"minhash_signatures": 1, "_index_layout": 1}, calls
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_ingest_query_keeps_a_pre_r12_exploded_index_layout(spark):
+    """The streaming counterpart of
+    test_pre_r12_exploded_index_keeps_one_layout_across_increments: over a
+    pre-existing exploded index the ingest query finds the history pairs,
+    appends its own batches in the exploded layout (so the second
+    trigger's history includes the first's), and a directory in neither
+    layout fails the first trigger that reads it."""
+    from pyspark.errors import StreamingQueryException
+
+    from detector_network_processor_spark.operators.dedup import (
+        band_rows,
+        minhash_signatures,
+    )
+
+    text_a = "the quick brown fox jumps over the lazy dog and runs far away tonight"
+    text_b = "muon detectors on rooftops record coincident hits from cosmic air showers"
+    schema = "doc_id long, text string"
+    chunks = [[(20, text_b)], [(30, text_a), (31, text_b)]]
+    tmp = tempfile.mkdtemp(prefix="dnp_ingestq_old_")
+    try:
+        # history that predates the query's batch ids (0, 1, ...)
+        band_rows(minhash_signatures(spark.createDataFrame(
+            [(i, text_a) for i in range(4)], schema
+        ))).write.parquet(f"{tmp}/index/ingest_batch=-1")
+        got, _ = _run_ingest_query(spark, f"{tmp}/q", chunks, f"{tmp}/index")
+        assert {(a, b) for a, b, _ in got} == {(0, 30), (1, 30), (2, 30), (3, 30), (20, 31)}, got
+        for batch_id in (0, 1):
+            cols = spark.read.parquet(f"{tmp}/index/ingest_batch={batch_id}").columns
+            assert sorted(cols) == ["band", "bhash", "doc_id", "signature"], cols
+
+        spark.createDataFrame([(1,)], "a long").write.parquet(f"{tmp}/bogus/ingest_batch=-1")
+        with pytest.raises(StreamingQueryException, match="not a near-dup band index"):
+            _run_ingest_query(spark, f"{tmp}/q_bogus", chunks, f"{tmp}/bogus")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
